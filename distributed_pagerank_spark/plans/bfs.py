@@ -34,12 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
-
-from distributed_pagerank_spark.plans.loop import (
-    KEEP_SESSION_CONFS,
-    loop_conf,
-    release_local_checkpoint,
-)
+from distributed_pagerank_spark.plans.loop import release_local_checkpoint
 
 
 def multi_source_bfs(
@@ -49,7 +44,6 @@ def multi_source_bfs(
     max_depth: int = 10,
     directed: bool = False,
     num_partitions: int | None = None,
-    truncate_interval: int = 5,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """Hop distances ``(root, id, dist)`` from every root in ``sources``.
@@ -63,11 +57,6 @@ def multi_source_bfs(
 
     Rounds run to ``max_depth`` or until every frontier is empty,
     whichever is first. The visited set is the result.
-
-    ``truncate_interval`` is retained for API compatibility but unused:
-    per-depth slices are flat checkpoint leaves, so the visited union's
-    lineage is already bounded by ``max_depth`` leaf references and
-    never needs a separate truncation pass.
     """
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     e = edges if directed else symmetrize(edges)
@@ -93,37 +82,35 @@ def multi_source_bfs(
     visited = frontier  # depth 0: the visited set IS the frontier
     metrics = metrics_out if metrics_out is not None else []
 
-    # KEEP_SESSION_CONFS since the r6 fourth wave (see pagerank.py):
-    # with checkpoint-leaf slices the layout is frozen, and AQE
-    # coalescing the per-depth frontier exchange measured 4.16 -> 3.85 s
-    # (min of 4, every rep faster; the r5 shape measured mixed/worse).
-    with loop_conf(spark, confs=KEEP_SESSION_CONFS):
-        for depth in range(1, max_depth + 1):
-            t0 = time.monotonic()
-            candidates = (
-                frontier.join(e, frontier["id"] == e["src"])
-                .select("root", F.col("dst").alias("id"))
-                .distinct()
-                .withColumn("dist", F.lit(depth))
-            )
-            # LAZY checkpoint: the termination count below is the
-            # materializing action — ONE job per depth, writing only the
-            # |frontier| new rows (the old shape re-materialized the
-            # whole visited union each depth).
-            new_frontier = (
-                candidates.join(visited, ["root", "id"], "left_anti")
-                .localCheckpoint(eager=False)
-            )
-            n_new = new_frontier.count()
-            metrics.append(
-                {"depth": depth, "frontier_rows": n_new,
-                 "total_s": round(time.monotonic() - t0, 4)}
-            )
-            if n_new == 0:
-                release_local_checkpoint(new_frontier)
-                break
-            visited = visited.unionByName(new_frontier)
-            frontier = new_frontier
+    # the session's AQE stays on: with checkpoint-leaf slices the layout
+    # is frozen, and AQE coalescing the per-depth frontier exchange
+    # measured 4.16 -> 3.85 s (r6, min of 4, every rep faster).
+    for depth in range(1, max_depth + 1):
+        t0 = time.monotonic()
+        candidates = (
+            frontier.join(e, frontier["id"] == e["src"])
+            .select("root", F.col("dst").alias("id"))
+            .distinct()
+            .withColumn("dist", F.lit(depth))
+        )
+        # LAZY checkpoint: the termination count below is the
+        # materializing action — ONE job per depth, writing only the
+        # |frontier| new rows (the old shape re-materialized the
+        # whole visited union each depth).
+        new_frontier = (
+            candidates.join(visited, ["root", "id"], "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        n_new = new_frontier.count()
+        metrics.append(
+            {"depth": depth, "frontier_rows": n_new,
+             "total_s": round(time.monotonic() - t0, 4)}
+        )
+        if n_new == 0:
+            release_local_checkpoint(new_frontier)
+            break
+        visited = visited.unionByName(new_frontier)
+        frontier = new_frontier
 
     e.unpersist()
     return visited.select("root", "id", "dist")

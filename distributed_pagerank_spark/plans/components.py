@@ -12,38 +12,34 @@ the same shuffle structure as the PageRank loop, so the same scale
 properties hold (static edges cached + pre-partitioned; only the label
 vector moves). Convergence = zero changed labels (scalar agg).
 
-Three algorithms, identical output (same fixpoint):
+Two algorithms, identical output (same fixpoint):
 
 - ``algorithm='hashmin'`` — the plain exchange above: O(diameter)
   rounds. Fine for shallow graphs (conversation chains of ≤12 turns),
   and the SQL-twinnable oracle tier (fixed-iteration unrolled twin).
-- ``algorithm='pointer'`` — hash-min + pointer jumping: each round
-  additionally folds in ``label(label(v))`` via a self-join of the
-  label vector, halving pointer-chain depth per round →
-  O(log diameter) rounds. Labels only ever decrease and always name a
-  vertex of the same component, and any state that is not the
-  component-min is not a hash-min fixpoint, so the fixpoint is identical
-  to hash-min's. This is the deep-graph path: a 10^5-long chain
-  converges in ~17 rounds instead of 10^5.
-- ``algorithm='hybrid'`` (DEFAULT) — plain hash-min, switching the jump
-  join on permanently the first time the per-round ``changed`` count
-  goes FLAT (``0.7 × prev < changed ≤ prev``). Flat decay is the
-  signature of a long pointer chain draining one hop per round (a
-  length-n chain changes n−t labels in round t → ratio ≈ 1), which is
-  exactly when pointer jumping pays. Shallow graphs never trip it:
-  their ``changed`` series is an expanding-then-collapsing wave
-  (measured on the supplier co-occurrence graph: [1000, 14998, 937,
-  1602, 0] — every ratio is either growth > 1 or collapse < 0.7), so
-  the |V|-sized jump self-join — a measured ~1.3× per-round tax that
-  buys zero round reduction there — never runs. A round-20 backstop
-  arms the jumps unconditionally in case an adversarial ``changed``
-  series ping-pongs around the flat band forever, bounding any run at
-  20 + O(log diameter) rounds.
+- ``algorithm='hybrid'`` (DEFAULT) — plain hash-min, switching pointer
+  jumping on permanently the first time the per-round ``changed`` count
+  goes FLAT (``0.7 × prev < changed ≤ prev``). A jumping round also
+  folds in ``label(label(v))`` via a self-join of the label vector,
+  halving pointer-chain depth per round → O(log diameter) rounds. Labels
+  only ever decrease and always name a vertex of the same component, and
+  any state that is not the component-min is not a hash-min fixpoint, so
+  the fixpoint is identical to hash-min's; a 10^5-long chain converges
+  in ~17 rounds instead of 10^5. Flat decay is the signature of a long
+  pointer chain draining one hop per round (a length-n chain changes
+  n−t labels in round t → ratio ≈ 1), which is exactly when pointer
+  jumping pays. Shallow graphs never trip it: their ``changed`` series
+  is an expanding-then-collapsing wave (measured on the supplier
+  co-occurrence graph: [1000, 14998, 937, 1602, 0] — every ratio is
+  either growth > 1 or collapse < 0.7), so the |V|-sized jump self-join
+  — a measured ~1.3× per-round tax that buys zero round reduction there
+  — never runs. A round-20 backstop arms the jumps unconditionally in
+  case an adversarial ``changed`` series ping-pongs around the flat band
+  forever, bounding any run at 20 + O(log diameter) rounds.
 """
 
 from __future__ import annotations
 
-import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,12 +49,12 @@ from distributed_pagerank_spark.operators.degrees import (
     symmetrize,
     vertices_from_edges,
 )
-from distributed_pagerank_spark.plans.loop import (
-    CheckpointManager,
-    KEEP_SESSION_CONFS,
-    loop_conf,
-    release_local_checkpoint,
-)
+from distributed_pagerank_spark.plans.loop import supersteps
+
+# hybrid: arm the jumps when changed decays by less than this factor ...
+STALL_DECAY = 0.7
+# ... or unconditionally after this many rounds of one call
+JUMP_BACKSTOP_ROUND = 20
 
 
 def connected_components(
@@ -71,16 +67,21 @@ def connected_components(
     num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
     algorithm: str = "hybrid",
-    stall_decay: float = 0.7,
-    jump_backstop_round: int = 20,
 ) -> DataFrame:
-    """→ ``(id long, component long)`` at fixpoint."""
-    if algorithm not in ("hashmin", "pointer", "hybrid"):
+    """→ ``(id long, component long)`` at fixpoint.
+
+    The label vector between rounds is an unreplicated local checkpoint
+    (``plans/loop.py``): on a cluster, losing an executor aborts the run.
+    Pass ``checkpoint_dir=`` to snapshot it to Parquet every
+    ``checkpoint_interval`` rounds; a rerun with the same graph resumes
+    from the newest complete snapshot. ``metrics_out`` receives one
+    record per round (``changed``, ``jumping``, timings).
+    """
+    if algorithm not in ("hashmin", "hybrid"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    ckpt = CheckpointManager(spark, checkpoint_dir)
     # one scan of the raw input: the 2-column projection is cached and the
     # symmetrized table AND the vertex set (which must keep self-loop-only
     # vertices that symmetrize drops) both derive from it
@@ -92,132 +93,62 @@ def connected_components(
         .persist()
     )
     sym.count()
+    labels = vertices_from_edges(raw).select("id", F.col("id").alias("component"))
 
-    # resume safety: a checkpoint dir is only valid for the same
-    # (graph, algorithm) job — same guard as PageRank's.
-    fingerprint = None
-    if ckpt.enabled():
-        agg = sym.agg(
-            F.count("*").alias("m"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).first()
-        fingerprint = f"cc|m={agg['m']}|h={agg['h']}"
+    changed: list[int] = []  # per round of this call
+    jumps: list[bool] = []  # per round of this call: ran the jump join
 
-    labels = None
-    start_iter = 0
-    if resume and ckpt.enabled():
-        latest = ckpt.latest()
-        if latest is not None:
-            it, st, manifest = latest
-            if manifest.get("fingerprint") == fingerprint:
-                start_iter, labels = it, st
-                if manifest.get("converged"):
-                    sym.unpersist()
-                    raw.unpersist()
-                    return labels.select("id", "component")
-            # stale dir from a different graph: start fresh
-    if labels is None:
-        labels = vertices_from_edges(raw).select(
-            "id", F.col("id").alias("component")
+    def step(labels: DataFrame, last: dict[str, Any] | None) -> DataFrame:
+        if last is not None:
+            changed.append(last["changed"])
+        # flat decay = a long pointer chain draining one hop per round:
+        # switch the O(log d) jump join on for the rest of the run.
+        # (Growth > 1 is an expanding wave on a shallow graph — healthy
+        # hash-min progress, no jumps.)
+        jumping = algorithm == "hybrid" and (
+            (bool(jumps) and jumps[-1])
+            or len(changed) >= JUMP_BACKSTOP_ROUND
+            or (len(changed) >= 2
+                and STALL_DECAY * changed[-2] < changed[-1] <= changed[-2])
         )
-    # id-sorted like the edge table: per-round sort-merge joins skip the
-    # label-side Sort (see pagerank.py)
-    labels = (
-        labels.repartition(num_partitions, "id")
-        .sortWithinPartitions("id")
-        .persist()
-    )
-    labels.count()
-    raw.unpersist()
+        jumps.append(jumping)
+        nbr = (
+            sym.join(labels, sym["src"] == labels["id"])
+            .groupBy("dst")
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        candidate = F.coalesce(F.col("nbr_min"), F.col("component"))
+        plan = labels.join(nbr, labels["id"] == nbr["dst"], "left")
+        if jumping:
+            # pointer jump: label(label(v)). Every label value is a vertex
+            # id (init = own id; min over ids), so the self-join resolves.
+            # The label vector is |V|-sized — this join shuffles only it.
+            jump = labels.select(
+                F.col("id").alias("__lid"), F.col("component").alias("__lcomp")
+            )
+            plan = plan.join(jump, F.col("component") == F.col("__lid"), "left")
+            candidate = F.least(
+                candidate, F.coalesce(F.col("__lcomp"), F.col("component"))
+            )
+        # the old label rides the snapshot for the changed count
+        return plan.select(
+            "id",
+            F.col("component").alias("old"),
+            F.least(F.col("component"), candidate).alias("component"),
+        )
 
-    iteration = start_iter
-    prev = labels
-    jumping = algorithm == "pointer"  # hybrid arms this on stall
-    prev_changed: int | None = None
-    # KEEP_SESSION_CONFS since the r6 fourth wave (see pagerank.py):
-    # checkpointed labels freeze their layout, so AQE can only help the
-    # per-round (dst, nbr_min) exchange — measured 4.65 -> 3.92 s AQE-on
-    # (min of 4, every rep faster); the old persist-chain shape measured
-    # 1.96x SLOWER with AQE on.
-    with loop_conf(spark, confs=KEEP_SESSION_CONFS):
-        while iteration < max_iter:
-            iteration += 1
-            t0 = time.monotonic()
-            nbr = (
-                sym.join(labels, sym["src"] == labels["id"])
-                .groupBy("dst")
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            candidate = F.coalesce(F.col("nbr_min"), F.col("component"))
-            step = labels.join(nbr, labels["id"] == nbr["dst"], "left")
-            if jumping:
-                # pointer jump: label(label(v)). Every label value is a vertex
-                # id (init = own id; min over ids), so the self-join resolves.
-                # The label vector is |V|-sized — this join shuffles only it.
-                jump = labels.select(
-                    F.col("id").alias("__lid"), F.col("component").alias("__lcomp")
-                )
-                step = step.join(
-                    jump, F.col("component") == F.col("__lid"), "left"
-                )
-                candidate = F.least(
-                    candidate, F.coalesce(F.col("__lcomp"), F.col("component"))
-                )
-            # lazy localCheckpoint: the changed-count aggregate below is
-            # the materializing action — ONE job computes the round,
-            # caches the labels (with the old label riding along for the
-            # count), cuts lineage, and returns the convergence statistic
-            # (r6; same fusion as plans/pagerank.py). No Observation, no
-            # separate eager truncation, no 2^k plan growth.
-            snapshot = (
-                step.select(
-                    "id",
-                    F.col("component").alias("old"),
-                    F.least(F.col("component"), candidate).alias("component"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            changed = (
-                snapshot.agg(
-                    F.sum((F.col("component") != F.col("old")).cast("long"))
-                ).first()[0]
-                or 0
-            )
-            new_labels = snapshot.select("id", "component")
-            used_jump = jumping
-            if algorithm == "hybrid" and not jumping and (
-                (
-                    prev_changed is not None
-                    and stall_decay * prev_changed < changed <= prev_changed
-                )
-                or iteration - start_iter >= jump_backstop_round
-            ):
-                # flat decay = a long pointer chain draining one hop per
-                # round: switch the O(log d) jump join on for the rest of
-                # the run. (Growth > 1 is an expanding wave on a shallow
-                # graph — healthy hash-min progress, no jumps.)
-                jumping = True
-            prev_changed = changed
-            labels = new_labels
-            if prev is not None:
-                release_local_checkpoint(prev)
-            prev = snapshot
-            converged = changed == 0
-            meta = {
-                "algo": "connected_components",
-                "changed": changed,
-                "jumping": used_jump,
-                "converged": converged,
-                "fingerprint": fingerprint,
-                "iter_s": round(time.monotonic() - t0, 4),
-            }
-            if metrics_out is not None:
-                metrics_out.append({"iteration": iteration, **meta})
-            if ckpt.enabled() and (
-                iteration % checkpoint_interval == 0 or converged
-            ):
-                ckpt.save(iteration, labels, meta)  # durable resume point only
-            if converged:
-                break
+    run = supersteps(
+        spark, labels, step,
+        {"changed": F.count(F.when(F.col("component") != F.col("old"), 1))},
+        lambda s: s["changed"] == 0,
+        max_steps=max_iter, num_partitions=num_partitions, release=[raw],
+        edges=sym, algo="connected_components", fingerprint="cc",
+        checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
+        resume=resume,
+    )
     sym.unpersist()
-    return labels.select("id", "component")
+    for rec, jumped in zip(run.records, jumps):
+        rec.update(jumping=jumped, iter_s=rec["total_s"])
+    if metrics_out is not None:
+        metrics_out.extend(run.records)
+    return run.state.select("id", "component")

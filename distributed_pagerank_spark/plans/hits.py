@@ -16,23 +16,11 @@ normalization is scale-invariant, substituting the hub update into the
 auth update gives ``auth_i = norm(Eᵀ·(E·auth_{i-1}))`` EXACTLY — the
 intermediate hub vector needs no normalization of its own (the scalar
 cancels inside norm), so the loop carries just the auth vector and
-chains both gathers inside a single DAG per iteration. Each iteration's
-raw snapshot is a LAZY ``localCheckpoint`` whose materializing action is
-the L1 auth-mass aggregate itself (r6: one job per iteration computes
-the state, caches it at the RDD layer, cuts lineage, AND returns the
-scalar — no Observation, no separate persist, zero truncation jobs);
-the normalizing division is applied lazily as a driver literal over the
-checkpointed snapshot — exact per-step normalization, no magnitude
-drift. The hub vector is derived once after the loop
-(``hub = norm(E·auth_k)``).
-
-Cutting lineage EVERY iteration (free here — the checkpoint rides the
-mass job) also kills the ×2-per-iteration logical-plan growth the state
-double-reference used to cause (row base + gather source), which is why
-the old shape needed an interval-2 eager-truncation cadence (r6 A/B:
-interval 4 → 11.2 s, 5 → 43 s of pure Catalyst analysis; a
-hub-and-auth state would double TWICE per round and measured 14.8 s for
-iteration 8 alone).
+chains both gathers inside a single superstep (``plans/loop.py``). The
+superstep's statistic is the raw L1 auth mass; the normalizing division
+is applied lazily as a driver literal over the checkpointed snapshot —
+exact per-step normalization, no magnitude drift. The hub vector is
+derived once after the loop (``hub = norm(E·auth_k)``).
 
 Scale shape: the edge table is cached TWICE, once partitioned+sorted by
 ``src`` (the auth gather joins hub contributions on src) and once by
@@ -46,7 +34,6 @@ iterations dominate.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -55,9 +42,8 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
 from distributed_pagerank_spark.plans.loop import (
-    KEEP_SESSION_CONFS,
-    loop_conf,
     release_local_checkpoint,
+    supersteps,
 )
 
 
@@ -76,8 +62,6 @@ def hits(
     max_iter: int = 20,
     eps: float = 0.0,
     num_partitions: int | None = None,
-    truncate_interval: int = 2,  # unused since r6 (lineage cut rides the
-    # per-iteration mass job); kept for API compatibility
 ) -> HitsResult:
     """Run HITS to ``max_iter`` rounds (or L1-delta ≤ eps on auth, when
     eps > 0 — the delta check costs one extra scalar agg per round over
@@ -85,6 +69,10 @@ def hits(
 
     Returns normalized ``(id, hub, auth)`` over all vertices; vertices
     with no in-links get auth 0, with no out-links hub 0.
+
+    The auth vector between rounds is an unreplicated local checkpoint
+    (``plans/loop.py``): on a cluster, losing an executor aborts the run,
+    and HITS has no durable ``checkpoint_dir`` path yet — rerun it.
     """
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
@@ -115,120 +103,76 @@ def hits(
     # so round 1's hub gather source IS the init state. The vertex count
     # rides the state materialization as a broadcast one-row aggregate
     # (1.0/__n is the same IEEE double division as the former Python
-    # literal), and the state itself is a LAZY localCheckpoint whose
-    # materializing action is iteration 1's mass aggregate (r6) — zero
-    # setup jobs beyond the cache fill. ``e`` must outlive that first
-    # materialization; it is released inside the loop.
+    # literal); the distinct-edge cache ``e`` is released once round 1
+    # has materialized the state.
     cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
-    state = (
-        verts.crossJoin(F.broadcast(cnt))
-        .select("id", (F.lit(1.0) / F.col("__n")).alias("auth"))
-        .repartition(num_partitions, "id")
-        .sortWithinPartitions("id")
-        .localCheckpoint(eager=False)
+    state = verts.crossJoin(F.broadcast(cnt)).select(
+        "id", (F.lit(1.0) / F.col("__n")).alias("auth")
     )
 
-    metrics: list[dict[str, Any]] = []
-    iteration, delta, converged = 0, float("inf"), False
-    prev_snapshot = state
-
-    # KEEP_SESSION_CONFS, not the AQE-off default: unlike the PageRank
-    # loop (whose state stays co-partitioned with the edge cache and
-    # which AQE coalescing would force to re-exchange), every HITS
-    # iteration re-keys through two unavoidable gather exchanges, and
-    # AQE coalescing those tiny shuffles to a task count matching the
-    # data is a measured 30% win (r6 A/B, tools/ab_hits.py: 9.5 s vs
-    # 14.1 s at sf0.1/local[32]; with truncate_interval 2 below, 7.3 s).
-    with loop_conf(spark, confs=KEEP_SESSION_CONFS):
-        while iteration < max_iter and not converged:
-            iteration += 1
-            t0 = time.monotonic()
-            auth_vec = state.select("id", "auth")
-            if iteration == 1:
-                # hub_0 == the uniform init vector: gather it directly
-                h_tmp = auth_vec.select(
-                    F.col("id").alias("hid"), F.col("auth").alias("h")
-                )
-            else:
-                # un-normalized intermediate hub E·auth — the scalar
-                # cancels inside the auth normalization below
-                h_tmp = (
-                    e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
-                    .groupBy(F.col("src").alias("hid"))
-                    .agg(F.sum("auth").alias("h"))
-                )
-            a_sums = (
-                e_src.join(h_tmp, e_src["src"] == F.col("hid"))
-                .groupBy("dst")
-                .agg(F.sum("h").alias("a_raw"))
+    def step(state: DataFrame, last: dict[str, Any] | None) -> DataFrame:
+        if last is None:
+            # hub_0 == the uniform init vector: gather it directly
+            h_tmp = state.select(F.col("id").alias("hid"), F.col("auth").alias("h"))
+        else:
+            # un-normalized intermediate hub E·auth — the scalar
+            # cancels inside the auth normalization
+            h_tmp = (
+                e_dst.join(state, e_dst["dst"] == state["id"])
+                .groupBy(F.col("src").alias("hid"))
+                .agg(F.sum("auth").alias("h"))
             )
-            # lazy localCheckpoint: the mass aggregate below is the
-            # materializing action — ONE job computes the iteration,
-            # caches the raw snapshot at the RDD layer, cuts lineage,
-            # and returns the L1 mass scalar (r6; same fusion as
-            # plans/ppr.py's barrier counts)
-            snapshot = (
-                state.join(a_sums, state["id"] == a_sums["dst"], "left")
-                .select(
-                    "id", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("auth_raw")
-                )
-                .localCheckpoint(eager=False)
-            )
-            a_mass = snapshot.agg(F.sum("auth_raw")).first()[0] or 1.0
-            if iteration == 1:
-                # the init state (and everything derived from the raw
-                # input) is now baked into the checkpointed snapshot —
-                # drop the distinct-edge cache
-                e.unpersist()
-            # lazy normalization: a driver literal over the cached snapshot
-            new_state = snapshot.select(
-                "id", (F.col("auth_raw") / F.lit(float(a_mass))).alias("auth")
-            )
-            if eps > 0.0:
-                delta = (
-                    new_state.select("id", F.col("auth").alias("na"))
-                    .join(state.select("id", F.col("auth").alias("oa")), "id")
-                    .agg(F.sum(F.abs(F.col("na") - F.col("oa"))))
-                    .first()[0]
-                    or 0.0
-                )
-                converged = delta <= eps
-            if prev_snapshot is not None:
-                release_local_checkpoint(prev_snapshot)
-            prev_snapshot = snapshot
-            state = new_state
-            metrics.append(
-                {
-                    "iteration": iteration,
-                    "a_mass": a_mass,
-                    "delta": delta if eps > 0 else None,
-                    "total_s": round(time.monotonic() - t0, 4),
-                }
-            )
-
-        # final hub vector: hub_k = norm(E·auth_k) — one extra job
-        auth_vec = state.select("id", "auth")
-        h_sums = (
-            e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
-            .groupBy(F.col("src").alias("hid"))
-            .agg(F.sum("auth").alias("h_raw"))
+        a_sums = (
+            e_src.join(h_tmp, e_src["src"] == F.col("hid"))
+            .groupBy("dst")
+            .agg(F.sum("h").alias("a_raw"))
         )
-        scores_raw = (
-            state.join(h_sums, state["id"] == F.col("hid"), "left")
-            .select(
-                "id",
-                F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("hub_raw"),
-                "auth",
+        cols = ["id", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("auth_raw")]
+        if eps > 0.0:
+            cols.append(F.col("auth").alias("auth_old"))  # for the L1 delta
+        return state.join(a_sums, state["id"] == a_sums["dst"], "left").select(*cols)
+
+    def derive(snapshot: DataFrame, s: dict[str, Any]) -> DataFrame:
+        # lazy normalization: a driver literal over the cached snapshot
+        auth = F.col("auth_raw") / F.lit(float(s["a_mass"] or 1.0))
+        if eps > 0.0:
+            s["delta"] = (
+                snapshot.agg(F.sum(F.abs(auth - F.col("auth_old")))).first()[0]
+                or 0.0
             )
-            .localCheckpoint(eager=False)
+        return snapshot.select("id", auth.alias("auth"))
+
+    run = supersteps(
+        spark, state, step, {"a_mass": F.sum("auth_raw")},
+        lambda s: eps > 0.0 and s["delta"] <= eps, derive=derive,
+        max_steps=max_iter, num_partitions=num_partitions, release=[e],
+    )
+
+    # final hub vector: hub_k = norm(E·auth_k) — one extra job
+    auth_vec = run.state
+    h_sums = (
+        e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
+        .groupBy(F.col("src").alias("hid"))
+        .agg(F.sum("auth").alias("h_raw"))
+    )
+    scores_raw = (
+        auth_vec.join(h_sums, auth_vec["id"] == F.col("hid"), "left")
+        .select(
+            "id",
+            F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("hub_raw"),
+            "auth",
         )
-        h_mass = scores_raw.agg(F.sum("hub_raw")).first()[0] or 1.0
+        .localCheckpoint(eager=False)
+    )
+    h_mass = scores_raw.agg(F.sum("hub_raw")).first()[0] or 1.0
 
     e_src.unpersist()
     e_dst.unpersist()
-    if prev_snapshot is not None and prev_snapshot is not scores_raw:
-        release_local_checkpoint(prev_snapshot)
+    release_local_checkpoint(run.snapshot)
     scores = scores_raw.select(
         "id", (F.col("hub_raw") / F.lit(float(h_mass))).alias("hub"), "auth"
     )
-    return HitsResult(scores, iteration, delta, converged, metrics)
+    return HitsResult(
+        scores, run.iteration, run.stats.get("delta", float("inf")),
+        run.converged, run.records,
+    )

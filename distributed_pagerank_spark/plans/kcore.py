@@ -43,7 +43,6 @@ def k_core(
     k: int,
     max_iter: int = 100,
     num_partitions: int | None = None,
-    truncate_interval: int = 5,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """Vertices of the k-core with their in-core degree → ``(id, degree)``.
@@ -68,10 +67,9 @@ def k_core(
     # LAZY localCheckpoint whose materializing action is the NEXT
     # round's removed-count (which scans it for degrees anyway) — the
     # old shape paid a second count job per round just to materialize.
-    # Leaf slices also cut the logical plan every round, so the
-    # eager-truncation cadence (``truncate_interval``, kept for API
-    # compatibility) has nothing left to truncate. Predecessor state is
-    # released only AFTER the count that materializes its successor.
+    # Leaf slices also cut the logical plan every round, so no eager
+    # truncation step is needed. Predecessor state is released only
+    # AFTER the count that materializes its successor.
     pending: list[DataFrame] = []
 
     with loop_conf(spark):

@@ -14,7 +14,6 @@ as ``max(struct(count, -label))`` so it stays a single aggregation
 
 from __future__ import annotations
 
-import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,12 +23,7 @@ from distributed_pagerank_spark.operators.degrees import (
     symmetrize,
     vertices_from_edges,
 )
-from distributed_pagerank_spark.plans.loop import (
-    CheckpointManager,
-    KEEP_SESSION_CONFS,
-    loop_conf,
-    release_local_checkpoint,
-)
+from distributed_pagerank_spark.plans.loop import supersteps
 
 
 def label_propagation(
@@ -43,11 +37,18 @@ def label_propagation(
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """→ ``(id long, label long)`` after ``rounds`` synchronous rounds
-    (early-stops at fixpoint)."""
+    (early-stops at fixpoint).
+
+    The label vector between rounds is an unreplicated local checkpoint
+    (``plans/loop.py``): on a cluster, losing an executor aborts the run.
+    Pass ``checkpoint_dir=`` to snapshot it to Parquet every
+    ``checkpoint_interval`` rounds and after the last; a rerun with the
+    same graph resumes from the newest complete snapshot.
+    ``metrics_out`` receives one record per round (``changed``, timings).
+    """
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    ckpt = CheckpointManager(spark, checkpoint_dir)
     # one scan of the raw input (see components.py): sym + vertex set both
     # derive from the cached 2-column projection
     raw = edges.select("src", "dst").persist()
@@ -58,102 +59,38 @@ def label_propagation(
         .persist()
     )
     sym.count()
+    labels = vertices_from_edges(raw).select("id", F.col("id").alias("label"))
 
-    # resume safety: same graph-fingerprint guard as PageRank/CC.
-    fingerprint = None
-    if ckpt.enabled():
-        agg = sym.agg(
-            F.count("*").alias("m"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).first()
-        fingerprint = f"lpa|m={agg['m']}|h={agg['h']}"
-
-    labels = None
-    start_round = 0
-    if resume and ckpt.enabled():
-        latest = ckpt.latest()
-        if latest is not None:
-            it, st, manifest = latest
-            if manifest.get("fingerprint") == fingerprint:
-                start_round, labels = it, st
-                if manifest.get("converged") or start_round >= rounds:
-                    sym.unpersist()
-                    raw.unpersist()
-                    return labels.select("id", "label")
-            # stale dir from a different graph: start fresh
-    if labels is None:
-        labels = vertices_from_edges(raw).select(
-            "id", F.col("id").alias("label")
+    def step(labels: DataFrame, last: dict[str, Any] | None) -> DataFrame:
+        freq = (
+            sym.join(labels, sym["src"] == labels["id"])
+            .groupBy("dst", "label")
+            .agg(F.count("*").alias("cnt"))
         )
-    # id-sorted like the edge table: per-round sort-merge joins skip the
-    # label-side Sort (see pagerank.py)
-    labels = (
-        labels.repartition(num_partitions, "id")
-        .sortWithinPartitions("id")
-        .persist()
-    )
-    labels.count()
-    raw.unpersist()
+        # top-1 label per dst: max over (cnt, -label) orders by frequency
+        # then smallest label — one agg, no window sort.
+        top = freq.groupBy("dst").agg(
+            F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m")
+        ).select("dst", (-F.col("m.neg")).alias("new_label"))
+        # the old label rides the snapshot for the changed count
+        return labels.join(top, labels["id"] == top["dst"], "left").select(
+            "id",
+            F.col("label").alias("old"),
+            F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
+        )
 
-    rnd = start_round
-    prev = labels
-    # KEEP_SESSION_CONFS: every round re-keys through the (dst, label)
-    # frequency exchange anyway, so AQE coalescing the tiny shuffles is a
-    # measured 12% win (r6 A/B, tools/ab_loop_aqe.py: 3.28/3.29/3.65 s
-    # AQE-on vs 3.75/4.04/4.40 s off — every rep faster), unlike the
-    # co-partition-pinned loops that keep the AQE-off default.
-    with loop_conf(spark, confs=KEEP_SESSION_CONFS):
-        while rnd < rounds:
-            rnd += 1
-            t0 = time.monotonic()
-            freq = (
-                sym.join(labels, sym["src"] == labels["id"])
-                .groupBy("dst", "label")
-                .agg(F.count("*").alias("cnt"))
-            )
-            # top-1 label per dst: max over (cnt, -label) orders by frequency
-            # then smallest label — one agg, no window sort.
-            top = freq.groupBy("dst").agg(
-                F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m")
-            ).select("dst", (-F.col("m.neg")).alias("new_label"))
-            # lazy localCheckpoint: the changed-count aggregate below is
-            # the materializing action — ONE job computes the round,
-            # caches the labels (old label riding along for the count),
-            # cuts lineage, and returns the convergence statistic (r6;
-            # same fusion as plans/components.py). No Observation, no
-            # separate eager truncation, no 2^k plan growth.
-            snapshot = (
-                labels.join(top, labels["id"] == top["dst"], "left")
-                .select(
-                    "id",
-                    F.col("label").alias("old"),
-                    F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            changed = (
-                snapshot.agg(
-                    F.sum((F.col("label") != F.col("old")).cast("long"))
-                ).first()[0]
-                or 0
-            )
-            labels = snapshot.select("id", "label")
-            if prev is not None:
-                release_local_checkpoint(prev)
-            prev = snapshot
-            converged = changed == 0
-            meta = {
-                "algo": "label_propagation",
-                "changed": changed,
-                "converged": converged,
-                "fingerprint": fingerprint,
-                "iter_s": round(time.monotonic() - t0, 4),
-            }
-            if metrics_out is not None:
-                metrics_out.append({"round": rnd, **meta})
-            if ckpt.enabled() and (rnd % checkpoint_interval == 0 or converged):
-                ckpt.save(rnd, labels, meta)  # durable resume point only
-            if converged:
-                break
+    run = supersteps(
+        spark, labels, step,
+        {"changed": F.count(F.when(F.col("label") != F.col("old"), 1))},
+        lambda s: s["changed"] == 0,
+        max_steps=rounds, num_partitions=num_partitions, release=[raw],
+        edges=sym, algo="label_propagation", fingerprint="lpa",
+        checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
+        resume=resume,
+    )
     sym.unpersist()
-    return labels.select("id", "label")
+    for rec in run.records:
+        rec["iter_s"] = rec["total_s"]
+    if metrics_out is not None:
+        metrics_out.extend(run.records)
+    return run.state.select("id", "label")

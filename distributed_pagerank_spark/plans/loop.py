@@ -1,36 +1,48 @@
-"""Checkpointed iteration harness shared by all fixpoint algorithms.
+"""The superstep loop shared by the fixpoint algorithms, and its durable state.
 
-Replaces the reference's crash-recovery protocol — full ``State``
-replication master→workers once per iteration
+``supersteps()`` runs PageRank, connected components, label propagation
+and HITS. Each superstep is one dataflow, vertex state ⋈ messages →
+group-by (the Pregelix shape), written by the algorithm as a
+``step(state, last_stats) -> plan`` builder; ``supersteps()`` owns
+everything around it:
+
+- **State layout.** The initial state is repartitioned and sorted by
+  ``id`` (the layout of the algorithms' edge caches, so the per-superstep
+  sort-merge joins skip the state-side exchange and sort). Fresh state
+  is a lazy ``localCheckpoint``; a resumed Parquet read-back is
+  persisted and counted.
+- **One job per superstep.** The plan becomes a lazy
+  ``localCheckpoint`` and ONE ``agg(*stats).first()`` is its
+  materializing action: the job computes the superstep, caches it at the
+  RDD layer, cuts lineage and returns the convergence statistics. The
+  snapshot keeps the physical partitioning and ordering, so the next
+  superstep's joins never re-exchange the state side, and lineage stays
+  one leaf deep. The next state is derived from the snapshot and the
+  previous snapshot is released.
+- **Durable state** (``checkpoint_dir=``). The directory is fingerprinted
+  to the (graph, parameters) job, resumes from its newest complete
+  snapshot and saves every ``checkpoint_interval`` supersteps, on
+  convergence and on the last allowed superstep.
+- **Records.** One dict per executed superstep: ``iteration``, the
+  statistics by name, ``converged`` and ``total_s`` (plan, materialization
+  and statistic; not the durable save).
+
+Fault-tolerance trade: the per-superstep snapshots are UNREPLICATED
+local checkpoints, Spark's documented trade of executor-loss
+recomputability for speed. In local mode (one JVM) there is nothing to
+lose; on a cluster, losing an executor mid-run aborts the job, and the
+recovery path is ``checkpoint_dir=``: state snapshots to Parquet with a
+commit-marked manifest and resumes exactly.
+
+Durable snapshots replace the reference's crash-recovery protocol, full
+``State`` replication master→workers once per iteration
 (``pkg/node/master.go:225-241``, report §III.C: queues drain at iteration
-boundaries, a consistent cut) — with a per-iteration snapshot to
-Parquet + a JSON manifest. The manifest is written LAST and acts as the
-commit marker, so a killed job resumes from the newest *complete*
-iteration (north_rule N4: "resumable from checkpoint with per-partition
-lineage + metrics").
-
-Each manifest records:
-- iteration number, the loop's convergence statistic (delta / changed),
-- wall-clock per phase (supplied by the algorithm),
-- per-partition lineage: rows per physical partition of the snapshot
-  (``spark_partition_id`` histogram) — the evidence trail for skew.
-
-Two truncation modes:
-- ``dir=None`` → ``localCheckpoint(eager=True)``: cuts lineage in memory,
-  cheapest, no resume (used inside tests/benchmarks that don't exercise
-  recovery);
-- ``dir=...`` → Parquet write + read-back: durable, resumable, and also
-  truncates lineage (the read-back plan is a fresh scan).
-
-Fault-tolerance trade (r6): the iteration loops cut lineage every
-iteration with UNREPLICATED lazy ``localCheckpoint`` snapshots — the
-documented Spark trade of executor-loss recomputability for speed. In
-local mode (one JVM) there is nothing to lose; on a cluster, losing an
-executor mid-run aborts the job and recovery is the durable
-``CheckpointManager`` path (pass ``checkpoint_dir=``), which snapshots
-state to Parquet with a commit-marked manifest at the configured
-cadence and resumes exactly — that path is unchanged and
-kill/resume-tested.
+boundaries, a consistent cut), with a snapshot to Parquet + a JSON
+manifest. The manifest is written LAST and acts as the commit marker, so
+a killed job resumes from the newest *complete* iteration. Each manifest
+records the iteration, the loop's statistics and per-partition lineage
+(rows per physical partition of the snapshot — the evidence trail for
+skew).
 
 Filesystem access goes through the Hadoop ``FileSystem`` API (via the
 session's JVM gateway), so the same code works on ``file:``, ``hdfs:``
@@ -40,50 +52,34 @@ or ``s3a:`` checkpoint locations — required on a real cluster.
 from __future__ import annotations
 
 import json
+import time
 from contextlib import contextmanager
-from typing import Any
+from dataclasses import dataclass, field
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
 
-# Runtime confs pinned for the duration of an iteration loop — the
-# DEFAULT, re-measured per algorithm TWICE in r6 (tools/ab_loop_aqe.py,
-# interleaved at sf0.1/local[32]) because the answer depends on the
-# state representation. In the old persist-chain shape, AQE coalescing
-# could BREAK the state/sums co-partitioning that keeps an update join
-# exchange-free (cc measured 1.96× slower AQE-on, pagerank 1.21×). The
-# fourth-wave lazy-checkpoint states FREEZE their layout in the RDD, so
-# that failure mode is gone and AQE coalescing the per-iteration
-# exchanges wins for most loops — re-measured on the checkpoint shape
-# (min of 4, every rep faster): pagerank 0.78×, cc 0.84×, bfs 0.93×,
-# plus the loops that always won (HITS 0.70×, labelprop 0.875×). Those
-# pass KEEP_SESSION_CONFS. Still AQE-off (measured neutral-to-worse on
-# the new shape): betweenness 1.03×, ppr 1.04×, k_core ~1.2×, k_truss
-# ~1.0× — their per-round exchanges are already tiny or their loops are
-# dominated by broadcast shapes AQE re-plans for no gain. AQE stays on
-# for one-time preparation and everything outside loops.
+# Runtime confs pinned for the duration of the betweenness, ppr, k-core,
+# k-truss and SCC loops: AQE off. Their per-round exchanges are tiny or
+# dominated by broadcast shapes AQE re-plans for no gain (r6, measured
+# neutral-to-worse AQE-on: betweenness 1.03x, ppr 1.04x, k_core ~1.2x,
+# k_truss ~1.0x). The ``supersteps()`` loops apply no confs; see there.
 LOOP_CONFS = {"spark.sql.adaptive.enabled": "false"}
-
-# Sentinel for loops measured FASTER under the session's own (AQE-on)
-# configuration: pins nothing, keeps the caller's runtime confs live.
-KEEP_SESSION_CONFS: dict[str, str] = {}
 
 
 @contextmanager
-def loop_conf(spark: SparkSession, confs: dict[str, str] | None = None):
-    """Set per-loop runtime confs, restoring the caller's values on exit.
+def loop_conf(spark: SparkSession):
+    """Pin LOOP_CONFS, restoring the caller's values on exit.
 
     Mutable runtime SQL confs only; safe on any session (the correctness
     driver's included). Restores on exceptions too, so a failed loop never
-    leaks its conf into the caller's session. ``confs=None`` applies the
-    LOOP_CONFS default; pass KEEP_SESSION_CONFS (or any dict) to override
-    — an empty dict pins nothing.
+    leaks its conf into the caller's session.
     """
-    confs = LOOP_CONFS if confs is None else confs
     old: dict[str, str | None] = {}
-    for k, v in confs.items():
+    for k, v in LOOP_CONFS.items():
         try:
             old[k] = spark.conf.get(k)
         except Exception:
@@ -210,27 +206,18 @@ class CheckpointManager:
     def _iter_dir(self, iteration: int) -> str:
         return f"{self.dir}/iter_{iteration:05d}"
 
-    def save(
-        self,
-        iteration: int,
-        state: DataFrame,
-        meta: dict[str, Any],
-        collect_lineage: bool = True,
-    ) -> DataFrame:
-        """Snapshot ``state``; return the read-back (lineage-truncated) DF."""
-        if not self.enabled():
-            return state.localCheckpoint(eager=True)
+    def save(self, iteration: int, state: DataFrame, meta: dict[str, Any]) -> None:
+        """Snapshot ``state`` to Parquet, then commit its manifest."""
         d = self._iter_dir(iteration)
         state.write.mode("overwrite").parquet(f"{d}/state.parquet")
-        reloaded = self.spark.read.parquet(f"{d}/state.parquet")
+        # the known schema skips Parquet's footer-inference job
+        reloaded = self.spark.read.schema(state.schema).parquet(f"{d}/state.parquet")
         manifest = dict(meta)
         manifest["iteration"] = iteration
-        if collect_lineage:
-            manifest["partitions"] = partition_lineage(reloaded)
-            manifest["rows"] = sum(p["rows"] for p in manifest["partitions"])
+        manifest["partitions"] = partition_lineage(reloaded)
+        manifest["rows"] = sum(p["rows"] for p in manifest["partitions"])
         manifest["complete"] = True
         _write_text(self.spark, f"{d}/{MANIFEST}", json.dumps(manifest, indent=1))
-        return reloaded
 
     def completed_iterations(self) -> list[int]:
         if not self.enabled():
@@ -267,3 +254,130 @@ class CheckpointManager:
         return json.loads(
             _read_text(self.spark, f"{self._iter_dir(iteration)}/{MANIFEST}")
         )
+
+
+@dataclass
+class SuperstepRun:
+    """What ``supersteps()`` leaves behind."""
+
+    state: DataFrame  # the final state
+    snapshot: DataFrame | None  # its cached snapshot; None if no superstep ran
+    iteration: int
+    stats: dict[str, Any]  # the final superstep's (or resumed manifest's)
+    converged: bool
+    records: list[dict[str, Any]] = field(default_factory=list)
+
+
+def _fingerprint(edges: DataFrame) -> str:
+    """Order-insensitive identity of the loop's cached edge table."""
+    agg = edges.agg(
+        F.count("*").alias("m"),
+        F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+    ).first()
+    return f"|m={agg['m']}|h={agg['h']}"
+
+
+def supersteps(
+    spark: SparkSession,
+    state: DataFrame,
+    step: Callable[[DataFrame, dict[str, Any] | None], DataFrame],
+    stats: dict[str, Column],
+    stop: Callable[[dict[str, Any]], bool],
+    *,
+    max_steps: int,
+    num_partitions: int,
+    derive: Callable[[DataFrame, dict[str, Any]], DataFrame] | None = None,
+    release: Iterable[DataFrame] = (),
+    edges: DataFrame | None = None,
+    algo: str = "",
+    fingerprint: str = "",
+    fingerprint_tail: Callable[[], str] | None = None,
+    checkpoint_dir: str | None = None,
+    checkpoint_interval: int = 1,
+    resume: bool = True,
+) -> SuperstepRun:
+    """Run ``step`` to a fixpoint: at most ``max_steps`` supersteps, until
+    ``stop(stats)`` holds.
+
+    ``state`` is the fresh initial state, keyed by ``id``. ``step(state,
+    last)`` builds one superstep's plan; ``last`` holds the previous
+    superstep's statistics, and is None on the first superstep of a call.
+    ``stats`` maps names to the aggregate expressions over the plan's
+    output; they are computed by the superstep's single job. The next
+    state is ``derive(snapshot, stats)`` (default: the snapshot projected
+    to the state's columns); a ``derive`` may add statistics that need
+    the derived state. ``release`` lists caches that only the initial
+    state reads: they are unpersisted once it is materialized.
+
+    Durable state needs ``edges``, the loop's cached edge table, and the
+    ``algo`` / ``fingerprint`` names its manifests carry. The fingerprint
+    is ``fingerprint`` + the edge table's row count and hash + the
+    optional ``fingerprint_tail()``, so a directory written by another
+    job (graph or parameters) is never resumed.
+
+    No confs are applied. These four loops run under the session's AQE,
+    re-measured per loop on the checkpoint-state shape (r6,
+    tools/ab_loop_aqe.py, min of 4, every rep faster with AQE on):
+    pagerank 0.78x (3.84 -> 3.01 s), cc 0.84x (4.65 -> 3.92 s), HITS
+    0.70x, labelprop 0.875x. The snapshots freeze their layout in the RDD,
+    so AQE cannot break the state/edge co-partitioning (which made the
+    old persist-chain shape 1.21x slower for pagerank and 1.96x for cc),
+    and it coalesces the per-superstep gather exchanges.
+    """
+    ckpt = CheckpointManager(spark, checkpoint_dir)
+    pending = list(release)
+
+    def release_pending() -> None:
+        while pending:
+            pending.pop().unpersist()
+
+    iteration, last, converged, resumed = 0, {}, False, None
+    if ckpt.enabled():
+        fingerprint += _fingerprint(edges)
+        if fingerprint_tail is not None:
+            fingerprint += fingerprint_tail()
+        latest = ckpt.latest() if resume else None
+        # a mismatched fingerprint is a stale dir from another job: start fresh
+        if latest is not None and latest[2].get("fingerprint") == fingerprint:
+            iteration, resumed, manifest = latest
+            converged = bool(manifest.get("converged"))
+            last = {k: manifest[k] for k in stats if k in manifest}
+            if converged or iteration >= max_steps:
+                release_pending()
+                return SuperstepRun(resumed, None, iteration, last, converged)
+
+    if resumed is not None:
+        state = resumed
+    state = state.repartition(num_partitions, "id").sortWithinPartitions("id")
+    if resumed is None:
+        # materialized by the first superstep's statistic job
+        state = state.localCheckpoint(eager=False)
+    else:
+        # rare path: the read-back materializes eagerly
+        state = state.persist()
+        state.count()
+        release_pending()
+    columns = state.columns
+    snapshot, prev, records = None, state, []
+    while not converged and iteration < max_steps:
+        iteration += 1
+        t0 = time.monotonic()
+        snapshot = step(state, last if records else None).localCheckpoint(eager=False)
+        last = snapshot.agg(*[c.alias(k) for k, c in stats.items()]).first().asDict()
+        release_pending()
+        state = derive(snapshot, last) if derive else snapshot.select(*columns)
+        release_local_checkpoint(prev)
+        prev = snapshot
+        converged = bool(stop(last))
+        record = {"iteration": iteration, **last, "converged": converged,
+                  "total_s": round(time.monotonic() - t0, 4)}
+        records.append(record)
+        if ckpt.enabled() and (
+            iteration % checkpoint_interval == 0 or converged or iteration >= max_steps
+        ):
+            ckpt.save(iteration, state, {
+                "algo": algo, **last, "converged": converged,
+                "fingerprint": fingerprint, "metrics": record,
+            })
+    release_pending()
+    return SuperstepRun(state, snapshot, iteration, last, converged, records)

@@ -29,7 +29,6 @@ table — only the (|V|-sized) rank vector moves.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -41,12 +40,7 @@ from distributed_pagerank_spark.operators.degrees import (
     vertices_from_edges,
 )
 from distributed_pagerank_spark.operators.salting import hub_ids, salted_sum
-from distributed_pagerank_spark.plans.loop import (
-    CheckpointManager,
-    KEEP_SESSION_CONFS,
-    loop_conf,
-    release_local_checkpoint,
-)
+from distributed_pagerank_spark.plans.loop import supersteps
 
 
 @dataclass
@@ -139,8 +133,6 @@ def pagerank(
     skew_salt: int | None = None,
     hub_threshold: int | None = None,
     num_partitions: int | None = None,
-    truncate_interval: int = 5,  # unused since r6 (lineage cut rides the
-    # per-iteration delta aggregate); kept for API compatibility
 ) -> PageRankResult:
     """Run PageRank to L1 convergence.
 
@@ -151,13 +143,18 @@ def pagerank(
     ``weight_col`` names an edge-weight column: the transition probability
     becomes ``w(u,v) / Σ_x w(u,x)`` instead of ``1 / out_degree`` (dup
     edges merge by summing weight; ``dup_policy`` is subsumed).
+
+    The rank vector between iterations is an unreplicated local
+    checkpoint (``plans/loop.py``): on a cluster, losing an executor
+    aborts the run. Pass ``checkpoint_dir=`` to snapshot it to Parquet
+    every ``checkpoint_interval`` iterations; a rerun with the same
+    arguments resumes from the newest complete snapshot.
     """
     if not 0.0 < c < 1.0:
         raise ValueError("damping c must be in (0,1)")
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    ckpt = CheckpointManager(spark, checkpoint_dir)
 
     edges_w, verts, edges_cached, n_edges = _prepare_edges(
         spark, edges, dup_policy, num_partitions, weight_col=weight_col
@@ -169,28 +166,16 @@ def pagerank(
         edges_cached.unpersist()
         raise ValueError("empty edge table: no vertices to rank")
 
-    # Resume safety: a checkpoint directory is only valid for the same
-    # (graph, parameters) job. Fingerprint = order-insensitive hash of the
-    # distinct edge set + the semantic knobs; one cheap agg over the cached
-    # edge product, only paid when checkpointing is on.
-    fingerprint = None
-    if ckpt.enabled():
-        agg = edges_w.agg(
-            F.count("*").alias("m"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).first()
+    def e_identity() -> str:
         # the personalization vector is part of the job identity: resuming
         # with a different e must NOT continue from the old checkpoint
         # (the old e is baked into the checkpointed ranks).
-        e_h = "uniform"
-        if e is not None:
-            eagg = e.agg(
-                F.expr("bit_xor(xxhash64(id, round(e, 12)))").alias("eh")
-            ).first()
-            e_h = f"{eagg['eh']}|norm={normalize_e}"
-        fingerprint = f"pagerank|c={c}|eps={eps}|dup={dup_policy}|" \
-                      f"dangling={dangling}|w={weight_col}|" \
-                      f"m={agg['m']}|h={agg['h']}|e={e_h}"
+        if e is None:
+            return "|e=uniform"
+        eagg = e.agg(
+            F.expr("bit_xor(xxhash64(id, round(e, 12)))").alias("eh")
+        ).first()
+        return f"|e={eagg['eh']}|norm={normalize_e}"
 
     # --- E vector ----------------------------------------------------
     if e is not None:
@@ -209,7 +194,7 @@ def pagerank(
     # carried as a state column so the per-iteration dangling mass can be
     # computed inside the iteration's single materializing job (alongside
     # the delta aggregate) — no extra driver-side job per iteration.
-    state_cols = ["id", "e", "rank"]
+    extra_cols = []
     if dangling == "redistribute":
         srcs = edges_w.select(F.col("src").alias("id")).distinct()
         verts = (
@@ -217,244 +202,105 @@ def pagerank(
             .withColumn("dang", F.col("__out").isNull())
             .drop("__out")
         )
-        state_cols = state_cols + ["dang"]
+        extra_cols = ["dang"]
 
-    # --- initial state / resume --------------------------------------
-    start_iter, state, last_delta = 0, None, float("inf")
-    if resume and ckpt.enabled():
-        latest = ckpt.latest()
-        if latest is not None:
-            it, st, manifest = latest
-            if manifest.get("fingerprint") == fingerprint:
-                start_iter, state = it, st
-                last_delta = manifest.get("delta", float("inf"))
-                if manifest.get("converged"):
-                    # same final normalization as a fresh run (reference
-                    # pagerank.go:38-45) — checkpoints store PRE-normalized
-                    # ranks, so resume-after-converged must not skip it or
-                    # a second run returns differently-scaled ranks.
-                    ranks = st.select("id", "rank")
-                    if dangling == "reference":
-                        total = ranks.agg(F.sum("rank")).first()[0] or 1.0
-                        ranks = ranks.withColumn(
-                            "rank", F.col("rank") / F.lit(float(total))
-                        )
-                    edges_w.unpersist()
-                    edges_cached.unpersist()
-                    return PageRankResult(ranks, it, last_delta, True)
-            # mismatched fingerprint: stale dir from another job — start fresh
-    if state is None:
-        # ONE materializing job instead of three (verts count for e,
-        # verts count for rank, state count): the vertex count joins in
-        # as a broadcast one-row aggregate and ``1.0 / __n`` is the same
-        # IEEE double division the former Python literal performed.
-        cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
-        base = verts.crossJoin(F.broadcast(cnt))
-        e_col = (
-            F.col("e") if e is not None else (F.lit(1.0) / F.col("__n"))
+    # --- initial state -----------------------------------------------
+    # ONE materializing job instead of three (verts count for e, verts
+    # count for rank, state count): the vertex count joins in as a
+    # broadcast one-row aggregate and ``1.0 / __n`` is the same IEEE
+    # double division the former Python literal performed.
+    cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
+    e_col = F.col("e") if e is not None else (F.lit(1.0) / F.col("__n"))
+    state = verts.crossJoin(F.broadcast(cnt)).select(
+        "id",
+        e_col.alias("e"),
+        (F.lit(1.0) / F.col("__n")).alias("rank"),
+        *extra_cols,
+    )
+
+    # per-run seeds over the laid-out state, taken by the first superstep
+    # of a call: the vertex count and the current dangling mass (one
+    # aggregate, which also materializes a lazy state), and the hub set
+    n, hubs = None, None
+    contrib_expr = (
+        F.col("rank") * F.col("__w") / F.col("out_degree")
+        if weight_col is not None
+        else F.col("rank") / F.col("out_degree")
+    )
+
+    def step(state: DataFrame, last: dict[str, Any] | None) -> DataFrame:
+        nonlocal n, hubs
+        dang_mass = last and last.get("dang_mass")
+        if last is None and dangling == "redistribute":
+            seed = state.agg(
+                F.sum(F.when(F.col("dang"), F.col("rank"))).alias("__dm"),
+                F.count(F.lit(1)).alias("__n"),
+            ).first()
+            dang_mass, n = seed["__dm"], seed["__n"]
+        if last is None and skew_salt:
+            n = n or state.count()
+            thr = hub_threshold if hub_threshold is not None else max(
+                64, int(n_edges / max(n, 1)) * 16
+            )
+            hubs = hub_ids(edges_w, thr).persist()
+            hubs.count()
+
+        ranks = state.select("id", "rank")
+        contribs = edges_w.join(ranks, edges_w["src"] == ranks["id"]).select(
+            "src", "dst", contrib_expr.alias("contrib")
         )
-        state = base.select(
+        if hubs is not None:
+            sums = salted_sum(
+                contribs, hubs, key="dst", value="contrib",
+                salt_buckets=skew_salt, salt_source="src",
+            )
+        else:
+            sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("sum"))
+        base = F.coalesce(F.col("sum"), F.lit(0.0))
+        if dangling == "redistribute":
+            base = base + F.lit(float(dang_mass or 0.0) / n)
+        # rank_old rides the snapshot, so the L1 delta needs no second input
+        return state.join(sums, state["id"] == sums["dst"], "left").select(
             "id",
-            e_col.alias("e"),
-            (F.lit(1.0) / F.col("__n")).alias("rank"),
-            *state_cols[3:],
+            "e",
+            F.col("rank").alias("rank_old"),
+            (F.lit(c) * base + F.lit(1.0 - c) * F.col("e")).alias("rank"),
+            *extra_cols,
         )
-    # co-partition the state with the edge table's layout and pin it;
-    # the iteration chain keeps this partitioning (join outputs inherit
-    # it), so per-iteration exchanges touch only the contribution stream.
-    # Sorted within partitions like the edge product: the scatter and
-    # update sort-merge joins then skip their per-iteration Sort of the
-    # state side (the SMJ output stays id-sorted, so chained snapshots
-    # inherit the ordering for free).
-    state = state.repartition(num_partitions, "id").sortWithinPartitions("id")
-    n = None
-    if start_iter > 0:
-        # resume snapshots (parquet read-back) materialize eagerly as
-        # before — rare path, and the count doubles as the lineage anchor
-        state = state.persist()
-        n = state.count()
-        edges_cached.unpersist()
-        edges_cached = None
-    else:
-        # fresh state is a LAZY localCheckpoint: its materializing action
-        # is the first aggregate that touches it (iteration 1's statistic
-        # job in the default path; the seed aggregates below for the
-        # redistribute/skew paths) — no separate state-count job
-        # (emptiness was already rejected on the edge-product count
-        # above). Uniform across dangling modes, so the planner sees the
-        # same state statistics either way. The distinct-edge cache must
-        # outlive the first materialization; it is released inside the
-        # loop (or below, when a seed aggregate materializes first).
-        state = state.localCheckpoint(eager=False)
 
-    # dangling mass of the CURRENT state; seeded once here (the vertex
-    # count rides the same aggregate — which also materializes a lazy
-    # state), then updated for free each iteration by the materializing
-    # aggregate.
-    dang_mass = 0.0
+    stats = {
+        "delta": F.sum(F.abs(F.col("rank") - F.col("rank_old"))),
+        # rides the same job so the final 'reference' normalization needs
+        # no extra aggregate pass
+        "rank_sum": F.sum("rank"),
+    }
     if dangling == "redistribute":
-        seed = state.agg(
-            F.sum(F.when(F.col("dang"), F.col("rank"))).alias("__dm"),
-            F.count(F.lit(1)).alias("__n"),
-        ).first()
-        dang_mass = seed["__dm"] or 0.0
-        if n is None:
-            n = seed["__n"]
-        if edges_cached is not None:
-            edges_cached.unpersist()
-            edges_cached = None
-
-    hubs = None
-    if skew_salt:
-        if n is None:
-            n = state.count()  # materializes the lazy state (skew path)
-            if edges_cached is not None:
-                edges_cached.unpersist()
-                edges_cached = None
-        thr = hub_threshold if hub_threshold is not None else max(
-            64, int(edges_w.count() / max(n, 1)) * 16
-        )
-        hubs = hub_ids(edges_w, thr).persist()
-        hubs.count()
-
-    metrics: list[dict[str, Any]] = []
-    iteration = start_iter
-    converged = last_delta <= eps
-    delta = last_delta
-    # Iteration state management (r6): each iteration's output is a LAZY
-    # ``localCheckpoint`` whose materializing action is the delta/Σrank
-    # aggregate itself — ONE job computes the iteration, caches it at the
-    # RDD layer, cuts lineage, and returns the convergence statistics
-    # (``rank_old`` rides the snapshot so the delta needs no second
-    # input). ``localCheckpoint`` preserves the physical partitioning and
-    # ordering in the LogicalRDD leaf, so the update join never
-    # re-exchanges the state side; and with lineage cut EVERY iteration
-    # for free, the former 2^truncate_interval Catalyst plan growth (the
-    # state is referenced twice per iteration: scatter + update) and its
-    # eager-truncation jobs disappear — iteration wall-clock measured
-    # flat at ~0.4 s/iter vs 0.40→1.24 s growth over 5 iterations in the
-    # persist-chain shape (sf0.1 transcripts, local[32]).
-    prev_snapshot = state
-    last_rank_sum = None  # Σrank of the final state (see below)
-
-    # KEEP_SESSION_CONFS since the r6 fourth wave: with checkpointed
-    # state the layout AQE used to break is frozen in the RDD, and AQE
-    # coalescing the per-iteration contribution shuffle is a measured win
-    # (tools/ab_loop_aqe.py on the checkpoint shape, min of 4, every rep
-    # faster: 3.84 -> 3.01 s AQE-on at sf0.1/local[32]; the old
-    # persist-chain shape measured the OPPOSITE, 1.21x slower).
-    with loop_conf(spark, confs=KEEP_SESSION_CONFS):
-        while not converged and iteration < max_iter:
-            iteration += 1
-            t0 = time.monotonic()
-
-            ranks = state.select("id", "rank")
-            contrib_expr = (
-                F.col("rank") * F.col("__w") / F.col("out_degree")
-                if weight_col is not None
-                else F.col("rank") / F.col("out_degree")
-            )
-            contribs = edges_w.join(ranks, edges_w["src"] == ranks["id"]).select(
-                "src", "dst", contrib_expr.alias("contrib")
-            )
-            if hubs is not None:
-                sums = salted_sum(
-                    contribs, hubs, key="dst", value="contrib",
-                    salt_buckets=skew_salt, salt_source="src",
-                )
-            else:
-                sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("sum"))
-
-            base = F.coalesce(F.col("sum"), F.lit(0.0))
-            if dangling == "redistribute":
-                base = base + F.lit(float(dang_mass) / n)
-
-            new_state = (
-                state.join(sums, state["id"] == sums["dst"], "left")
-                .select(
-                    "id",
-                    "e",
-                    F.col("rank").alias("rank_old"),
-                    (F.lit(c) * base + F.lit(1.0 - c) * F.col("e")).alias("rank"),
-                    *state_cols[3:],
-                )
-            )
-
-            t1 = time.monotonic()
-            # ONE job per iteration: the delta/Σrank aggregate below is the
-            # materializing action of the lazy checkpoint — it computes the
-            # iteration, caches the snapshot (rank_old included, so the L1
-            # delta needs no second input), cuts lineage, and returns the
-            # convergence statistics in the same pass.
-            agg_exprs = [F.sum(F.abs(F.col("rank") - F.col("rank_old"))).alias("delta"),
-                         # rides the same job so the final 'reference'
-                         # normalization needs no extra aggregate pass
-                         F.sum("rank").alias("rank_sum")]
-            if dangling == "redistribute":
-                agg_exprs.append(
-                    F.sum(F.when(F.col("dang"), F.col("rank"))).alias("dang_mass")
-                )
-            snapshot = new_state.localCheckpoint(eager=False)
-            t2 = time.monotonic()
-            observed = snapshot.agg(*agg_exprs).first()
-            if edges_cached is not None:
-                # the first materialization has now baked the vertex set
-                # into the checkpointed state — drop the distinct-edge cache
-                edges_cached.unpersist()
-                edges_cached = None
-            delta = observed["delta"] or 0.0
-            last_rank_sum = observed["rank_sum"]
-            if dangling == "redistribute":
-                dang_mass = observed["dang_mass"] or 0.0
-            t3 = time.monotonic()
-            converged = delta <= eps
-            state = snapshot.select(*state_cols)
-            # free the previous iteration's cached rank vector (handles both
-            # the LogicalRDD snapshots and the persisted init state)
-            if prev_snapshot is not None:
-                release_local_checkpoint(prev_snapshot)
-            prev_snapshot = snapshot
-
-            iter_metrics = {
-                "iteration": iteration,
-                "delta": delta,
-                "converged": converged,
-                "update_plan_s": round(t1 - t0, 4),
-                "materialize_s": round(t2 - t1, 4),
-                "delta_agg_s": round(t3 - t2, 4),
-            }
-            do_ckpt = ckpt.enabled() and (
-                iteration % checkpoint_interval == 0 or converged or iteration >= max_iter
-            )
-            if do_ckpt:
-                # durable snapshot (resume point); keep iterating on the cached
-                # copy — the parquet read-back is only used by resume.
-                ckpt.save(
-                    iteration,
-                    state,
-                    {"algo": "pagerank", "delta": delta, "converged": converged,
-                     "fingerprint": fingerprint, "metrics": iter_metrics},
-                )
-            iter_metrics["total_s"] = round(time.monotonic() - t0, 4)
-            metrics.append(iter_metrics)
+        stats["dang_mass"] = F.sum(F.when(F.col("dang"), F.col("rank")))
+    run = supersteps(
+        spark, state, step, stats, lambda s: (s["delta"] or 0.0) <= eps,
+        max_steps=max_iter, num_partitions=num_partitions,
+        # the first materialization bakes the vertex set into the state
+        release=[edges_cached], edges=edges_w, algo="pagerank",
+        fingerprint=f"pagerank|c={c}|eps={eps}|dup={dup_policy}|"
+                    f"dangling={dangling}|w={weight_col}",
+        fingerprint_tail=e_identity, checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval, resume=resume,
+    )
 
     # --- final normalization (reference: pagerank.go:38-45) ----------
-    # Σrank of the final state was observed on its materializing job
-    # (state after a truncation holds the same rows, so the sum is still
-    # valid); only a zero-iteration run (resume already past eps) pays
-    # the aggregate.
-    ranks = state.select("id", "rank")
+    # Σrank of the final state was observed on its materializing job;
+    # only a run that computed nothing (resume already past eps) and whose
+    # manifest predates the statistic pays the aggregate. Checkpoints
+    # store PRE-normalized ranks, so a resumed run normalizes too.
+    ranks = run.state.select("id", "rank")
     if dangling == "reference":
-        total = (
-            last_rank_sum
-            if last_rank_sum is not None
-            else ranks.agg(F.sum("rank")).first()[0]
-        ) or 1.0
-        ranks = ranks.withColumn("rank", F.col("rank") / F.lit(float(total)))
+        total = run.stats.get("rank_sum") or ranks.agg(F.sum("rank")).first()[0]
+        ranks = ranks.withColumn("rank", F.col("rank") / F.lit(float(total or 1.0)))
 
     edges_w.unpersist()
-    if edges_cached is not None:  # zero-iteration run: nothing materialized
-        edges_cached.unpersist()
     if hubs is not None:
         hubs.unpersist()
-    return PageRankResult(ranks, iteration, delta, converged, metrics)
+    return PageRankResult(
+        ranks, run.iteration, run.stats.get("delta", float("inf")),
+        run.converged, run.records,
+    )

@@ -5,6 +5,7 @@ import math
 from distributed_pagerank_spark.plans.loop import CheckpointManager
 from distributed_pagerank_spark.plans.pagerank import pagerank
 from distributed_pagerank_spark.plans.components import connected_components
+from distributed_pagerank_spark.plans.labelprop import label_propagation
 from distributed_pagerank_spark.sources.generator import generate_graph
 
 from tests.conftest import CHAIN5, edges_df
@@ -83,3 +84,35 @@ def test_components_resume(spark, tmp_path):
     got = {r["id"]: r["component"] for r in full.collect()}
     want = {r["id"]: r["component"] for r in clean.collect()}
     assert got == want
+
+
+def labels_of(df):
+    return {r["id"]: r["label"] for r in df.collect()}
+
+
+def test_labelprop_last_round_is_durable(spark, tmp_path):
+    """The last allowed round is saved even off the checkpoint cadence
+    (interval 2, 3 rounds), so an identical second call computes
+    nothing."""
+    ck = str(tmp_path / "ck")
+    edges = edges_df(spark, CHAIN5)
+    first = labels_of(label_propagation(spark, edges, rounds=3, checkpoint_dir=ck))
+    assert CheckpointManager(spark, ck).completed_iterations()[-1] == 3
+    metrics = []
+    again = label_propagation(spark, edges, rounds=3, checkpoint_dir=ck,
+                              metrics_out=metrics)
+    assert metrics == []
+    assert labels_of(again) == first
+
+
+def test_labelprop_resume_identical_to_uninterrupted(spark, tmp_path):
+    ck = str(tmp_path / "ck")
+    edges = generate_graph(spark, 30, max_edges=2, seed=13)
+    # run 1: "killed" after 1 round
+    label_propagation(spark, edges, rounds=1, checkpoint_dir=ck)
+    metrics = []
+    resumed = label_propagation(spark, edges, rounds=4, checkpoint_dir=ck,
+                                metrics_out=metrics)
+    clean = label_propagation(spark, edges, rounds=4)
+    assert [m["iteration"] for m in metrics] == [2, 3, 4]
+    assert labels_of(resumed) == labels_of(clean)

@@ -83,7 +83,7 @@ def chain_edges(n):
     return [(i, i + 1) for i in range(n - 1)]
 
 
-@pytest.mark.parametrize("algorithm", ["pointer", "hybrid"])
+@pytest.mark.parametrize("algorithm", ["hybrid"])
 def test_components_algorithms_match_hashmin(spark, algorithm):
     edges = generate_graph(spark, 300, max_edges=4, seed=11)
     a = {r["id"]: r["component"] for r in

@@ -311,3 +311,57 @@ def test_truss_round_reuses_adjacency_exchange_two_jobs(spark):
         spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
     jobs = sc.statusTracker().getJobIdsForGroup("truss-probe")
     assert len(jobs) <= 2, f"{len(jobs)} jobs for one truss round (want <=2)"
+
+
+@pytest.mark.parametrize(
+    "loop", ["pagerank", "cc_hashmin", "cc_hybrid", "labelprop", "hits"]
+)
+def test_superstep_loops_run_one_job_per_superstep(spark, loop):
+    """Every loop that runs on ``plans/loop.py``'s ``supersteps()`` runs ONE
+    job per superstep: four more supersteps cost exactly four more jobs,
+    and the whole call (answer materialized) stays within its budget."""
+    from distributed_pagerank_spark.plans.components import connected_components
+    from distributed_pagerank_spark.plans.hits import hits
+    from distributed_pagerank_spark.plans.labelprop import label_propagation
+    from distributed_pagerank_spark.plans.pagerank import pagerank
+
+    calls = {
+        "pagerank": lambda e, k: pagerank(spark, e, eps=0.0, max_iter=k).ranks,
+        "cc_hashmin": lambda e, k: connected_components(
+            spark, e, max_iter=k, algorithm="hashmin"),
+        "cc_hybrid": lambda e, k: connected_components(
+            spark, e, max_iter=k, algorithm="hybrid"),
+        "labelprop": lambda e, k: label_propagation(spark, e, rounds=k),
+        "hits": lambda e, k: hits(spark, e, max_iter=k).scores,
+    }
+    # jobs at k=2 before the loops shared supersteps()
+    budget = {"pagerank": 5, "cc_hashmin": 5, "cc_hybrid": 5,
+              "labelprop": 5, "hits": 6}
+    sc = spark.sparkContext
+    # a 41-vertex chain: no loop reaches its fixpoint within 6 supersteps
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+    # micro data would broadcast every join (each broadcast build is its
+    # own job), and AQE splits one aggregate into a job per query stage
+    prior_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+
+    def jobs(k):
+        group = f"superstep-{loop}-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            calls[loop](edges, k).count()
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        two, six = jobs(2), jobs(6)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior_bc)
+        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
+    assert six - two == 4, (two, six)
+    assert two <= budget[loop], two
