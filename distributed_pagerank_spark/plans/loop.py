@@ -1,7 +1,8 @@
 """The superstep loop shared by the fixpoint algorithms, and its durable state.
 
-``supersteps()`` runs PageRank, connected components, label propagation
-and HITS. Each superstep is one dataflow, vertex state ⋈ messages →
+``supersteps()`` runs PageRank, connected components, label propagation,
+HITS, and the color and reach max fixpoints of every SCC outer round.
+Each superstep is one dataflow, vertex state ⋈ messages →
 group-by (the Pregelix shape), written by the algorithm as a
 ``step(state, last_stats) -> plan`` builder; ``supersteps()`` owns
 everything around it:
@@ -19,6 +20,9 @@ everything around it:
   superstep's joins never re-exchange the state side, and lineage stays
   one leaf deep. The next state is derived from the snapshot and the
   previous snapshot is released.
+- **Size estimates reset.** Each snapshot leaf drops the size estimate
+  it would inherit from the superstep's plan (``_snapshot``), so
+  estimates never compound from one superstep to the next.
 - **Durable state** (``checkpoint_dir=``). The directory is fingerprinted
   to the (graph, parameters) job, resumes from its newest complete
   snapshot and saves every ``checkpoint_interval`` supersteps, on
@@ -62,11 +66,13 @@ from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
 
-# Runtime confs pinned for the duration of the betweenness, ppr, k-core,
-# k-truss and SCC loops: AQE off. Their per-round exchanges are tiny or
-# dominated by broadcast shapes AQE re-plans for no gain (r6, measured
-# neutral-to-worse AQE-on: betweenness 1.03x, ppr 1.04x, k_core ~1.2x,
-# k_truss ~1.0x). The ``supersteps()`` loops apply no confs; see there.
+# Runtime confs pinned for the duration of the betweenness, ppr, k-core
+# and k-truss loops and of SCC's outer loop: AQE off. Their per-round
+# exchanges are tiny or dominated by broadcast shapes AQE re-plans for no
+# gain (r6, measured neutral-to-worse AQE-on: betweenness 1.03x, ppr
+# 1.04x, k_core ~1.2x, k_truss ~1.0x). ``supersteps()`` applies no confs
+# (see there), so SCC's two fixpoints run with the AQE-off its outer loop
+# pins.
 LOOP_CONFS = {"spark.sql.adaptive.enabled": "false"}
 
 
@@ -99,23 +105,6 @@ def loop_conf(spark: SparkSession):
                     spark.conf.set(k, v)
             except Exception:
                 pass
-
-_OBS_COUNTER = 0
-
-
-def obs_name(prefix: str) -> str:
-    """Session-unique Observation name.
-
-    ``CollectMetrics`` names must be unique within a plan tree; result
-    DataFrames keep their observe nodes (post-truncation iterations), so
-    two algorithm runs in one session would collide on plain
-    ``{prefix}_{iteration}`` names the moment their results are joined
-    ([DUPLICATED_METRICS_NAME]). A process-wide counter keeps names unique
-    across calls while staying deterministic for tests.
-    """
-    global _OBS_COUNTER
-    _OBS_COUNTER += 1
-    return f"{prefix}_r{_OBS_COUNTER}"
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -151,6 +140,38 @@ def release_local_checkpoint(df: DataFrame) -> None:
         df.unpersist()
     except Exception:
         pass
+
+
+def _snapshot(plan: DataFrame) -> DataFrame:
+    """Lazy ``localCheckpoint`` of ``plan`` whose leaf carries no size
+    estimate.
+
+    ``localCheckpoint`` copies the plan's estimated size onto its
+    ``LogicalRDD`` leaf, and a join's estimate is the product of its
+    inputs'. A superstep that reads the state k times therefore raises
+    the estimate to the k-th power: its bit length grows k-fold per
+    superstep (55,870 bits after 12 supersteps of the jumping CC on a
+    1024-vertex chain), until Catalyst's BigInt stats arithmetic
+    dominates planning. No conf turns the copy off, so the leaf is
+    rebuilt on the same RDD, output, partitioning and ordering without
+    the inherited statistics or constraints. Its estimate falls back to
+    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default, so the
+    state side is never broadcast).
+    """
+    spark = plan.sparkSession
+    leaf = plan.localCheckpoint(eager=False)._jdf.queryExecution().logical()
+    none = spark._jvm.scala.Option.empty()
+    fresh = leaf.copy(
+        leaf.output(), leaf.rdd(), leaf.outputPartitioning(),
+        leaf.outputOrdering(), leaf.isStreaming(), leaf.stream(),
+        spark._jsparkSession, none, none,
+    )
+    return DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, fresh
+        ),
+        spark,
+    )
 
 
 def _fs(spark: SparkSession, path: str):
@@ -315,7 +336,8 @@ def supersteps(
     optional ``fingerprint_tail()``, so a directory written by another
     job (graph or parameters) is never resumed.
 
-    No confs are applied. These four loops run under the session's AQE,
+    No confs are applied. PageRank, CC, HITS and label propagation run
+    under the session's AQE (SCC calls in under its ``loop_conf``),
     re-measured per loop on the checkpoint-state shape (r6,
     tools/ab_loop_aqe.py, min of 4, every rep faster with AQE on):
     pagerank 0.78x (3.84 -> 3.01 s), cc 0.84x (4.65 -> 3.92 s), HITS
@@ -362,7 +384,7 @@ def supersteps(
     while not converged and iteration < max_steps:
         iteration += 1
         t0 = time.monotonic()
-        snapshot = step(state, last if records else None).localCheckpoint(eager=False)
+        snapshot = _snapshot(step(state, last if records else None))
         last = snapshot.agg(*[c.alias(k) for k, c in stats.items()]).first().asDict()
         release_pending()
         state = derive(snapshot, last) if derive else snapshot.select(*columns)

@@ -38,12 +38,17 @@ one-hop rounds across the two fixpoints of outer round 1 alone (~400 s
 at 32 threads, jobs dominated by fixed scheduling cost); jumping closes
 the same color fixpoint in 18 rounds (~11 s measured).
 
+Both fixpoints run on ``supersteps()`` (``plans/loop.py``): one job per
+round, in which the round's changed-label count is the statistic that
+materializes the new label vector as a flat snapshot leaf.
+
 Scale shape: both fixpoints move only |V_r|-sized label vectors against
 a per-round cached-and-shrinking edge set (same gather-scatter economy
-as the PageRank loop); the extraction anti-join broadcasts when the
-assigned set is small. Worst case (a chain of SCCs in adversarial id
-order) degrades to O(chain length) outer rounds — the same worst case
-every coloring-family SCC algorithm has without DFS.
+as the PageRank loop); the edge set shrinks by semi-joins against the
+unassigned remainder, broadcast when it is small. Worst case (a chain
+of SCCs in adversarial id order) degrades to O(chain length) outer
+rounds — the same worst case every coloring-family SCC algorithm has
+without DFS.
 
 Final labels are canonicalized to the minimum member id (one
 aggregation + broadcast join), so output is independent of which member
@@ -53,16 +58,18 @@ happened to be the color root.
 from __future__ import annotations
 
 import time
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
 from distributed_pagerank_spark.plans.loop import (
+    SuperstepRun,
     loop_conf,
-    obs_name,
     release_local_checkpoint,
+    supersteps,
 )
 
 
@@ -71,30 +78,22 @@ def _max_prop(
     edges_r: DataFrame,
     state: DataFrame,
     max_rounds: int,
+    num_partitions: int,
     gather_from: str,
     group_to: str,
-    tag: str,
-) -> DataFrame:
+    release: tuple[DataFrame, ...] = (),
+) -> SuperstepRun:
     """Jump-accelerated directed max-label fixpoint over ``(id, c)``.
 
     Per round ``c(v)`` folds in (a) the max label across incident edges
     — labels read at the ``gather_from`` endpoint, delivered to the
     ``group_to`` endpoint — and (b) the pointer jump ``c(c(v))``, sound
     because every label is a vertex id carrying the fixpoint's
-    reachability invariant. Converges in O(log d) rounds.
+    reachability invariant. Converges in O(log d) rounds; stops when no
+    label changed. The caller owns ``run.snapshot`` (the final label
+    vector's leaf) and releases it once nothing derived from it is lazy."""
 
-    Lineage is truncated every 3 rounds with an in-memory
-    ``localCheckpoint``: each round references ``prev`` THREE times (row
-    base + edge gather + jump), so the un-truncated logical tree grows
-    ×3 per round — interval 3 caps Catalyst analysis at 27× (interval 6
-    = 729× measured as a multi-minute analysis stall on a 7-edge
-    graph). In-memory rather than a reliable checkpoint: these inner
-    fixpoints have no resume contract (the outer SCC loop is where a
-    durable snapshot would live), so a reliable-checkpoint write+read
-    would be pure overhead."""
-    prev = state
-    since_truncate, last_truncated = 0, None
-    for rnd in range(1, max_rounds + 1):
+    def step(prev: DataFrame, last: dict[str, Any] | None) -> DataFrame:
         nbr = (
             edges_r.join(prev, edges_r[gather_from] == prev["id"])
             .groupBy(group_to)
@@ -103,8 +102,7 @@ def _max_prop(
         jump = prev.select(
             F.col("id").alias("__jid"), F.col("c").alias("__jc")
         )
-        obs = Observation(obs_name(f"scc_{tag}_{rnd}"))
-        plan = (
+        return (
             prev.join(nbr, prev["id"] == nbr[group_to], "left")
             .join(jump, prev["c"] == F.col("__jid"), "left")
             .select(
@@ -116,48 +114,14 @@ def _max_prop(
                     F.coalesce("__jc", prev["c"]),
                 ).alias("c"),
             )
-            .observe(
-                obs,
-                F.sum((F.col("c") != F.col("old")).cast("long")).alias(
-                    "changed"
-                ),
-            )
-            .select("id", "c")
         )
-        snapshot = plan.persist()
-        snapshot.count()
-        changed = obs.get["changed"] or 0
-        # NEVER release the live truncation leaf here: later snapshots'
-        # lineage still bottoms out at it, and a released localCheckpoint
-        # cannot recompute. Leaves are released only when the NEXT
-        # truncation has materialized (same ownership protocol as the
-        # PageRank loop's prev_snapshot/last_truncated pair).
-        if prev is not None and prev is not last_truncated:
-            release_local_checkpoint(prev)
-        prev = snapshot
-        since_truncate += 1
-        if changed == 0:
-            break
-        if since_truncate >= 3:
-            truncated = prev.localCheckpoint(eager=True)
-            prev.unpersist()
-            if last_truncated is not None:
-                release_local_checkpoint(last_truncated)
-            last_truncated = truncated
-            prev = truncated
-            since_truncate = 0
-    # return a FLAT leaf, not the tail of the snapshot chain: the caller
-    # composes fixpoint outputs (class_edges = cur ⋈ colors ⋈ colors;
-    # flags = colors ⋈ m_final), and composing un-flattened ≤27× trees
-    # multiplies into a Catalyst analysis stall (measured: a 513 s outer
-    # round whose compute was ~20 s). The leaf also gives the caller
-    # clean ownership — everything internal is released here.
-    out = prev.localCheckpoint(eager=True)
-    if prev is not out:
-        release_local_checkpoint(prev)
-    if last_truncated is not None and last_truncated is not prev:
-        release_local_checkpoint(last_truncated)
-    return out
+
+    return supersteps(
+        spark, state, step,
+        {"changed": F.count(F.when(F.col("c") != F.col("old"), 1))},
+        lambda s: s["changed"] == 0,
+        max_steps=max_rounds, num_partitions=num_partitions, release=release,
+    )
 
 
 def strongly_connected_components(
@@ -175,23 +139,18 @@ def strongly_connected_components(
     )
     metrics = metrics_out if metrics_out is not None else []
     raw = edges.select("src", "dst").persist()
+    # materialized (and cached) by the first color round, which also
+    # releases ``raw``
     cur = (
         raw.where(F.col("src") != F.col("dst"))
         .distinct()
         .repartition(num_partitions, "src")
         .persist()
     )
-    cur.count()
     # vertex set from the UN-filtered input: a vertex whose only edge is a
     # self-loop is still a (singleton) SCC and must appear in the output
-    verts = (
-        vertices_from_edges(raw)
-        .repartition(num_partitions, "id")
-        .persist()
-    )
-    verts.count()
-    raw.unpersist()
-    assigned_parts: list[DataFrame] = []
+    verts = vertices_from_edges(raw)
+    flag_leaves: list[DataFrame] = []
 
     with loop_conf(spark):
         for outer in range(1, max_outer + 1):
@@ -199,13 +158,10 @@ def strongly_connected_components(
 
             # 1. color: forward max-label fixpoint with pointer jumps
             colors = _max_prop(
-                spark,
-                cur,
-                verts.select("id", F.col("id").alias("c")),
-                max_prop,
-                gather_from="src",
-                group_to="dst",
-                tag=f"color_{outer}",
+                spark, cur, verts.select("id", F.col("id").alias("c")),
+                max_prop, num_partitions,
+                gather_from="src", group_to="dst",
+                release=(raw,) if outer == 1 else (),
             )
 
             # 2. confirm: within-class backward reachability to the root.
@@ -214,80 +170,66 @@ def strongly_connected_components(
             # the REVERSE direction: m(v) = max id reachable from v along
             # class edges; v reaches the root iff m(v) == c(v) (the root
             # is the class maximum).
-            csrc = colors.select(
+            csrc = colors.state.select(
                 F.col("id").alias("__cs"), F.col("c").alias("__ccs")
             )
-            cdst = colors.select(
+            cdst = colors.state.select(
                 F.col("id").alias("__cd"), F.col("c").alias("__ccd")
             )
-            # leaf, not persist: m-prop embeds this tree in every round
+            # a leaf, so the reach rounds do not re-run these joins;
+            # materialized by the first reach round
             class_edges = (
                 cur.join(csrc, cur["src"] == F.col("__cs"))
                 .join(cdst, cur["dst"] == F.col("__cd"))
                 .where(F.col("__ccs") == F.col("__ccd"))
                 .select("src", "dst")
-                .localCheckpoint(eager=True)
+                .localCheckpoint(eager=False)
             )
-            m_final = _max_prop(
-                spark,
-                class_edges,
-                colors.select("id", F.col("id").alias("c")),
-                max_prop,
-                gather_from="dst",
-                group_to="src",
-                tag=f"reach_{outer}",
+            reach = _max_prop(
+                spark, class_edges,
+                colors.state.select("id", F.col("id").alias("c")),
+                max_prop, num_partitions,
+                gather_from="dst", group_to="src",
             )
+
+            # 3. extract: one leaf of (id, color, confirmed), materialized
+            # by the single job that counts both sides of the split. It
+            # cuts the fixpoints' lineage, so their leaves go now; the
+            # assigned and remaining filters read it until ``out`` is built
             flags = (
-                colors.withColumnRenamed("c", "color")
-                .join(
-                    m_final.withColumnRenamed("c", "m"), "id"
-                )
+                colors.state.withColumnRenamed("c", "color")
+                .join(reach.state.withColumnRenamed("c", "m"), "id")
                 .select(
                     "id",
                     F.col("color").alias("c"),
                     (F.col("m") == F.col("color")).alias("flag"),
                 )
+                .localCheckpoint(eager=False)
             )
-
-            # decouple BOTH extraction outputs from the fixpoint states as
-            # eager localCheckpoints (independent leaf blocks) BEFORE
-            # releasing colors/flags: `remaining` feeds next round's joins
-            # and broadcasts, and a released localCheckpoint cannot
-            # recompute ([CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND])
-            assigned = (
-                flags.where(F.col("flag"))
-                .select("id", F.col("c").alias("root"))
-                .localCheckpoint(eager=True)
-            )
-            n_done = assigned.count()
-            remaining = (
-                flags.where(~F.col("flag"))
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
-            n_rem = remaining.count()
-            assigned_parts.append(assigned)
+            split = flags.agg(
+                F.count(F.when(F.col("flag"), 1)).alias("assigned"),
+                F.count(F.when(~F.col("flag"), 1)).alias("remaining"),
+            ).first()
+            flag_leaves.append(flags)
+            n_rem = split["remaining"]
             metrics.append(
                 {
                     "outer": outer,
-                    "assigned": n_done,
+                    "assigned": split["assigned"],
                     "remaining": n_rem,
                     "total_s": round(time.monotonic() - t0, 4),
                 }
             )
-            release_local_checkpoint(colors)
-            release_local_checkpoint(m_final)
-            release_local_checkpoint(class_edges)
+            for leaf in (colors.snapshot, reach.snapshot, class_edges):
+                release_local_checkpoint(leaf)
             if n_rem == 0:
-                remaining.unpersist()
-                verts.unpersist()
                 break
             # shrink the subgraph to the unassigned remainder. Flattened
             # to a localCheckpoint LEAF, not a persist: every inner
-            # fixpoint round embeds cur's logical tree (×27 after jump
-            # replication), so a persist-chained cur that deepens by two
-            # joins per outer round turns later rounds into Catalyst
-            # analysis stalls — a leaf keeps every round's plan flat.
+            # fixpoint round embeds cur's logical tree, so a
+            # persist-chained cur that deepens by two joins per outer
+            # round would grow every later round's plan.
+            remaining = flags.where(~F.col("flag")).select("id")
             rem_b = (
                 F.broadcast(remaining) if n_rem <= 1_000_000 else remaining
             )
@@ -298,7 +240,6 @@ def strongly_connected_components(
             )
             release_local_checkpoint(cur)
             cur = nxt_edges
-            verts.unpersist()
             verts = remaining
         else:
             raise RuntimeError(
@@ -306,9 +247,10 @@ def strongly_connected_components(
             )
 
     release_local_checkpoint(cur)
-    labeled = assigned_parts[0]
-    for part in assigned_parts[1:]:
-        labeled = labeled.unionByName(part)
+    labeled = reduce(DataFrame.unionByName, [
+        flags.where(F.col("flag")).select("id", F.col("c").alias("root"))
+        for flags in flag_leaves
+    ])
     # canonicalize: component = min member id (root is the max-reaching
     # member, an artifact of the coloring order)
     # plain equi-join: canon has one row per SCC, which can approach |V|
@@ -320,6 +262,6 @@ def strongly_connected_components(
         .select("id", "component")
         .localCheckpoint(eager=True)
     )
-    for part in assigned_parts:
-        release_local_checkpoint(part)
+    for flags in flag_leaves:
+        release_local_checkpoint(flags)
     return out

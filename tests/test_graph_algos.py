@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import sys
+
 import pytest
 
 from distributed_pagerank_spark.oracle import (
@@ -108,6 +110,23 @@ def test_components_default_is_logarithmic_on_chain(spark):
     iters = len(metrics)
     assert iters <= m.ceil(m.log2(n)) + 4, iters  # 10 + slack, vs 1023 hash-min
     assert any(m_["jumping"] for m_ in metrics)  # the stall detector fired
+
+
+def test_components_hybrid_size_estimate_stays_bounded(spark):
+    """Every superstep snapshot is a fresh leaf. On a 1024-vertex chain the
+    jumping rounds read the label vector three times each; had each leaf
+    inherited its plan's size estimate, the output's estimate would be
+    raised to the third power per round (55,870 bits after 12 rounds)."""
+    out = connected_components(spark, edges_df(spark, chain_edges(1024)))
+    # a compounded estimate has more digits than Python's default limit
+    # for int conversion allows (4300)
+    limit = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(0)
+    try:
+        size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    finally:
+        sys.set_int_max_str_digits(limit)
+    assert size < 2**64, f"{size.bit_length()} bits"
 
 
 def test_components_hybrid_never_jumps_on_shallow_graph(spark):

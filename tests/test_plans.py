@@ -365,3 +365,40 @@ def test_superstep_loops_run_one_job_per_superstep(spark, loop):
         spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
     assert six - two == 4, (two, six)
     assert two <= budget[loop], two
+
+
+@pytest.mark.parametrize("pairs,before", [
+    # two cycles joined by a bridge: one outer round
+    ([(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 3)], 17),
+    # descending chain: colors drain one hop per round, 7 outer rounds
+    ([(i + 1, i) for i in range(6)], 106),
+], ids=["two_cycles", "chain7_decreasing"])
+def test_scc_job_budget(spark, pairs, before):
+    """SCC's two max fixpoints run one job per round on ``supersteps()`` and
+    each outer round's extraction is one job, so a call (answer counted)
+    costs strictly fewer jobs than ``before``: the count, at these settings,
+    of the hand-written loop that paid a persist + count per round, a
+    checkpoint every three rounds, a flattening checkpoint per fixpoint and
+    four extraction jobs per outer round."""
+    from distributed_pagerank_spark.plans.scc import (
+        strongly_connected_components,
+    )
+
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    # micro data would broadcast every join (each broadcast build is its
+    # own job), and AQE splits one aggregate into a job per query stage
+    prior_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc = spark.sparkContext
+    group = f"scc-budget-{len(pairs)}"
+    sc.setJobGroup(group, group)
+    try:
+        strongly_connected_components(spark, edges).count()
+    finally:
+        sc.setJobGroup("", "")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior_bc)
+        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs < before, (jobs, before)
