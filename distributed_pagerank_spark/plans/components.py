@@ -79,9 +79,7 @@ def connected_components(
     """
     if algorithm not in ("hashmin", "hybrid"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     # one scan of the raw input: the 2-column projection is cached and the
     # symmetrized table AND the vertex set (which must keep self-loop-only
     # vertices that symmetrize drops) both derive from it

@@ -76,9 +76,7 @@ def hits(
     """
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     # one scan of the raw input feeds both cached orientations
     e = edges.select("src", "dst").distinct().persist()
     e_src = (

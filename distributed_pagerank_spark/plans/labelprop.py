@@ -46,9 +46,7 @@ def label_propagation(
     same graph resumes from the newest complete snapshot.
     ``metrics_out`` receives one record per round (``changed``, timings).
     """
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     # one scan of the raw input (see components.py): sym + vertex set both
     # derive from the cached 2-column projection
     raw = edges.select("src", "dst").persist()

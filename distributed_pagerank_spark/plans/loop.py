@@ -19,7 +19,9 @@ everything around it:
   snapshot keeps the physical partitioning and ordering, so the next
   superstep's joins never re-exchange the state side, and lineage stays
   one leaf deep. The next state is derived from the snapshot and the
-  previous snapshot is released.
+  previous snapshot is released. The loop pins SUPERSTEP_CONFS for this:
+  AQE off, so the snapshot runs no eager stage jobs, and no size-based
+  broadcast, so the static edge table is never re-broadcast.
 - **Size estimates reset.** Each snapshot leaf drops the size estimate
   it would inherit from the superstep's plan (``_snapshot``), so
   estimates never compound from one superstep to the next.
@@ -66,26 +68,30 @@ from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
 
-# Runtime confs pinned for the duration of the betweenness, ppr, k-core
-# and k-truss loops and of SCC's outer loop: AQE off. Their per-round
-# exchanges are tiny or dominated by broadcast shapes AQE re-plans for no
-# gain (r6, measured neutral-to-worse AQE-on: betweenness 1.03x, ppr
-# 1.04x, k_core ~1.2x, k_truss ~1.0x). ``supersteps()`` applies no confs
-# (see there), so SCC's two fixpoints run with the AQE-off its outer loop
-# pins.
+# Runtime confs pinned by betweenness, ppr, k-core, k-truss and SCC's
+# outer loop: AQE off. It would re-plan their tiny per-round exchanges for
+# no gain, and run a lazy snapshot's query stages as eager jobs.
 LOOP_CONFS = {"spark.sql.adaptive.enabled": "false"}
+# ``supersteps()`` also turns size-based broadcast off: the cached edge
+# table has real statistics, the state leaf none, so the static edges
+# would be re-broadcast every superstep. ``F.broadcast`` hints still apply;
+# betweenness sizes its hints from the session's threshold. With AQE off
+# nothing coalesces surplus partitions, so ``supersteps()`` also shuffles
+# into the state's ``num_partitions`` (one per core by default, as in bfs,
+# ppr and betweenness).
+SUPERSTEP_CONFS = {**LOOP_CONFS, "spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 
 @contextmanager
-def loop_conf(spark: SparkSession):
-    """Pin LOOP_CONFS, restoring the caller's values on exit.
+def loop_conf(spark: SparkSession, confs: dict[str, str] = LOOP_CONFS):
+    """Pin ``confs``, restoring the caller's values on exit.
 
     Mutable runtime SQL confs only; safe on any session (the correctness
     driver's included). Restores on exceptions too, so a failed loop never
     leaks its conf into the caller's session.
     """
     old: dict[str, str | None] = {}
-    for k, v in LOOP_CONFS.items():
+    for k, v in confs.items():
         try:
             old[k] = spark.conf.get(k)
         except Exception:
@@ -336,70 +342,75 @@ def supersteps(
     optional ``fingerprint_tail()``, so a directory written by another
     job (graph or parameters) is never resumed.
 
-    No confs are applied. PageRank, CC, HITS and label propagation run
-    under the session's AQE (SCC calls in under its ``loop_conf``),
-    re-measured per loop on the checkpoint-state shape (r6,
-    tools/ab_loop_aqe.py, min of 4, every rep faster with AQE on):
-    pagerank 0.78x (3.84 -> 3.01 s), cc 0.84x (4.65 -> 3.92 s), HITS
-    0.70x, labelprop 0.875x. The snapshots freeze their layout in the RDD,
-    so AQE cannot break the state/edge co-partitioning (which made the
-    old persist-chain shape 1.21x slower for pagerank and 1.96x for cc),
-    and it coalesces the per-superstep gather exchanges.
+    The whole call (resume read-back, supersteps, durable saves) runs
+    under SUPERSTEP_CONFS, with every shuffle into ``num_partitions``, the
+    state's layout; the caller's values are restored on every exit. With
+    AQE on, each lazy snapshot ran its query stages as eager jobs; with
+    size-based broadcast on, each superstep re-broadcast the cached edge
+    table. Pinned, the scatter join is a sort-merge join with no exchange
+    or sort on either side. perfbench, local[4] on a 4-core host:
+    ``transcripts`` PageRank 6.39 -> 1.30 jobs per superstep (traced) and
+    ``pagerank_s`` median 11.0 -> 8.8 s (12 interleaved pairs).
     """
-    ckpt = CheckpointManager(spark, checkpoint_dir)
-    pending = list(release)
+    pins = {**SUPERSTEP_CONFS, "spark.sql.shuffle.partitions": str(num_partitions)}
+    with loop_conf(spark, pins):
+        ckpt = CheckpointManager(spark, checkpoint_dir)
+        pending = list(release)
 
-    def release_pending() -> None:
-        while pending:
-            pending.pop().unpersist()
+        def release_pending() -> None:
+            while pending:
+                pending.pop().unpersist()
 
-    iteration, last, converged, resumed = 0, {}, False, None
-    if ckpt.enabled():
-        fingerprint += _fingerprint(edges)
-        if fingerprint_tail is not None:
-            fingerprint += fingerprint_tail()
-        latest = ckpt.latest() if resume else None
-        # a mismatched fingerprint is a stale dir from another job: start fresh
-        if latest is not None and latest[2].get("fingerprint") == fingerprint:
-            iteration, resumed, manifest = latest
-            converged = bool(manifest.get("converged"))
-            last = {k: manifest[k] for k in stats if k in manifest}
-            if converged or iteration >= max_steps:
-                release_pending()
-                return SuperstepRun(resumed, None, iteration, last, converged)
+        iteration, last, converged, resumed = 0, {}, False, None
+        if ckpt.enabled():
+            fingerprint += _fingerprint(edges)
+            if fingerprint_tail is not None:
+                fingerprint += fingerprint_tail()
+            latest = ckpt.latest() if resume else None
+            # a mismatched fingerprint is a stale dir from another job: start fresh
+            if latest is not None and latest[2].get("fingerprint") == fingerprint:
+                iteration, resumed, manifest = latest
+                converged = bool(manifest.get("converged"))
+                last = {k: manifest[k] for k in stats if k in manifest}
+                if converged or iteration >= max_steps:
+                    release_pending()
+                    return SuperstepRun(resumed, None, iteration, last, converged)
 
-    if resumed is not None:
-        state = resumed
-    state = state.repartition(num_partitions, "id").sortWithinPartitions("id")
-    if resumed is None:
-        # materialized by the first superstep's statistic job
-        state = state.localCheckpoint(eager=False)
-    else:
-        # rare path: the read-back materializes eagerly
-        state = state.persist()
-        state.count()
+        if resumed is not None:
+            state = resumed
+        state = state.repartition(num_partitions, "id").sortWithinPartitions("id")
+        if resumed is None:
+            # materialized by the first superstep's statistic job
+            state = state.localCheckpoint(eager=False)
+        else:
+            # rare path: the read-back materializes eagerly
+            state = state.persist()
+            state.count()
+            release_pending()
+        columns = state.columns
+        snapshot, prev, records = None, state, []
+        while not converged and iteration < max_steps:
+            iteration += 1
+            t0 = time.monotonic()
+            snapshot = _snapshot(step(state, last if records else None))
+            last = snapshot.agg(
+                *[c.alias(k) for k, c in stats.items()]
+            ).first().asDict()
+            release_pending()
+            state = derive(snapshot, last) if derive else snapshot.select(*columns)
+            release_local_checkpoint(prev)
+            prev = snapshot
+            converged = bool(stop(last))
+            record = {"iteration": iteration, **last, "converged": converged,
+                      "total_s": round(time.monotonic() - t0, 4)}
+            records.append(record)
+            if ckpt.enabled() and (
+                iteration % checkpoint_interval == 0
+                or converged or iteration >= max_steps
+            ):
+                ckpt.save(iteration, state, {
+                    "algo": algo, **last, "converged": converged,
+                    "fingerprint": fingerprint, "metrics": record,
+                })
         release_pending()
-    columns = state.columns
-    snapshot, prev, records = None, state, []
-    while not converged and iteration < max_steps:
-        iteration += 1
-        t0 = time.monotonic()
-        snapshot = _snapshot(step(state, last if records else None))
-        last = snapshot.agg(*[c.alias(k) for k, c in stats.items()]).first().asDict()
-        release_pending()
-        state = derive(snapshot, last) if derive else snapshot.select(*columns)
-        release_local_checkpoint(prev)
-        prev = snapshot
-        converged = bool(stop(last))
-        record = {"iteration": iteration, **last, "converged": converged,
-                  "total_s": round(time.monotonic() - t0, 4)}
-        records.append(record)
-        if ckpt.enabled() and (
-            iteration % checkpoint_interval == 0 or converged or iteration >= max_steps
-        ):
-            ckpt.save(iteration, state, {
-                "algo": algo, **last, "converged": converged,
-                "fingerprint": fingerprint, "metrics": record,
-            })
-    release_pending()
-    return SuperstepRun(state, snapshot, iteration, last, converged, records)
+        return SuperstepRun(state, snapshot, iteration, last, converged, records)

@@ -152,9 +152,7 @@ def pagerank(
     """
     if not 0.0 < c < 1.0:
         raise ValueError("damping c must be in (0,1)")
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
 
     edges_w, verts, edges_cached, n_edges = _prepare_edges(
         spark, edges, dup_policy, num_partitions, weight_col=weight_col

@@ -134,9 +134,7 @@ def strongly_connected_components(
 ) -> DataFrame:
     """→ ``(id long, component long)``: component = min vertex id of the
     strongly connected component (singletons label themselves)."""
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     metrics = metrics_out if metrics_out is not None else []
     raw = edges.select("src", "dst").persist()
     # materialized (and cached) by the first color round, which also

@@ -2,8 +2,9 @@
 
 Local-mode defaults match the sandbox (single JVM, many cores); on a real
 cluster the same settings apply except master/memory, which come from
-``spark-submit``. AQE stays on: it coalesces the per-iteration shuffles of
-small frontiers and splits skewed join partitions at 100 TB scale.
+``spark-submit``. AQE stays on: it coalesces small shuffles and splits
+skewed join partitions at 100 TB scale. Every fixpoint loop but BFS pins
+it off (``plans/loop.py``).
 """
 
 from __future__ import annotations
@@ -74,6 +75,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # one WARN per superstep, by design: its released local checkpoint
+    # "cannot be recomputed after unpersisting" (plans/loop.py)
+    log4j = spark._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD", log4j.Level.ERROR)
     if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
         base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
         spark.sparkContext.setCheckpointDir(f"{base}/dps-rdd-checkpoints")

@@ -367,6 +367,94 @@ def test_superstep_loops_run_one_job_per_superstep(spark, loop):
     assert two <= budget[loop], two
 
 
+SESSION_CONFS = {"spark.sql.adaptive.enabled": "true",
+                 "spark.sql.autoBroadcastJoinThreshold": "10485760",
+                 "spark.sql.shuffle.partitions": "3"}
+
+
+@pytest.fixture
+def session_confs(spark):
+    """Sets the production session's AQE and broadcast threshold (and a
+    shuffle partition count no loop uses), restores the test session's
+    afterwards; yields a reader of their values."""
+    prior = {k: spark.conf.get(k) for k in SESSION_CONFS}
+    for k, v in SESSION_CONFS.items():
+        spark.conf.set(k, v)
+    yield lambda: {k: spark.conf.get(k) for k in SESSION_CONFS}
+    for k, v in prior.items():
+        spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize(
+    "loop", ["pagerank", "cc_hashmin", "cc_hybrid", "labelprop", "hits"]
+)
+def test_superstep_loops_run_one_job_per_superstep_under_session_confs(
+    spark, session_confs, loop
+):
+    """The one-job superstep holds at production confs: ``supersteps()``
+    pins its own and hands the caller's back after every call."""
+    import distributed_pagerank_spark as dps
+    from distributed_pagerank_spark.plans.hits import hits
+
+    calls = {
+        "pagerank": lambda e, k: dps.pagerank(spark, e, eps=0.0, max_iter=k).ranks,
+        "cc_hashmin": lambda e, k: dps.connected_components(
+            spark, e, max_iter=k, algorithm="hashmin"),
+        "cc_hybrid": lambda e, k: dps.connected_components(
+            spark, e, max_iter=k, algorithm="hybrid"),
+        "labelprop": lambda e, k: dps.label_propagation(spark, e, rounds=k),
+        "hits": lambda e, k: hits(spark, e, max_iter=k).scores,
+    }
+    sc = spark.sparkContext
+    # a 41-vertex chain: no loop reaches its fixpoint within 6 supersteps
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+
+    def jobs(k):
+        group = f"superstep-session-{loop}-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            calls[loop](edges, k).count()
+        finally:
+            sc.setJobGroup("", "")
+        assert session_confs() == SESSION_CONFS
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    two, six = jobs(2), jobs(6)
+    assert six - two == 4, (two, six)
+
+
+def test_supersteps_restores_caller_confs_on_error(spark, session_confs):
+    """A step that raises on superstep 2 leaves the caller's confs as they
+    were, as does a normal call."""
+    from distributed_pagerank_spark.plans.loop import supersteps
+
+    def step(state, last):
+        if last is not None:
+            raise RuntimeError("superstep 2 failed")
+        return state
+
+    def run(max_steps):
+        return supersteps(spark, spark.range(8), step, {"n": F.count("*")},
+                          lambda s: False, max_steps=max_steps, num_partitions=2)
+
+    with pytest.raises(RuntimeError, match="superstep 2 failed"):
+        run(3)
+    assert session_confs() == SESSION_CONFS
+    assert run(1).stats == {"n": 8}
+    assert session_confs() == SESSION_CONFS
+
+
+def test_local_checkpoint_release_warning_silenced(spark):
+    """Releasing a superstep's local checkpoint prints no per-superstep
+    "cannot be recomputed after unpersisting" WARN; other WARNs print."""
+    logs = spark._jvm.org.apache.logging.log4j.LogManager
+    rdd_log = logs.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+    assert not rdd_log.isWarnEnabled() and rdd_log.isErrorEnabled()
+    assert logs.getRootLogger().isWarnEnabled()
+
+
 @pytest.mark.parametrize("pairs,before", [
     # two cycles joined by a bridge: one outer round
     ([(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 3)], 17),
